@@ -52,24 +52,30 @@ object Bench {
     * per-query line grew past the driver's ~2000-char tail window at 210
     * queries, truncating mid-line — `parsed` came back null for BOTH r14
     * and r15 artifacts and the whole PERF comparison was lost (VERDICT
-    * r15 item 1). This line carries the totals, the error map (errors
-    * must stay loud), and the PATH of the full artifact holding the
-    * complete per-query map; it stays well under the tail window at any
-    * query count.
+    * r15 item 1). This line carries the totals, the first
+    * [[compactErrorCap]] errors by query name plus the error count
+    * `n_errors` (errors must stay loud, and every one is in the full
+    * artifact), and the PATH of the full artifact holding the complete
+    * per-query map; it stays well under the tail window at any query or
+    * error count.
     */
   private[graft] def renderCompactJson(
       merged: Map[String, Either[String, Double]], sfDir: String,
       retimed: Map[String, Double], fullPath: String): String = {
     val ok = merged.collect { case (k, Right(v)) => k -> v }
     val errs = merged.collect { case (k, Left(e)) => k -> e }
-    val es = errs.map { case (k, e) =>
+    val es = errs.toSeq.sortBy(_._1).take(compactErrorCap).map { case (k, e) =>
       s"\"" + k + "\":\"" + e.replaceAll("[\\p{Cntrl}\"\\\\]", " ") + "\""
     }.mkString("{", ",", "}")
     val total = if (ok.nonEmpty) ok.values.sum else 0.0
     s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""queries":${ok.size},"errors":$es,"retimed":${retimed.size},""" +
+      s""""queries":${ok.size},"errors":$es,"n_errors":${errs.size},""" +
+      s""""retimed":${retimed.size},""" +
       s""""queries_file":"$fullPath","sf":"$sfDir"}"""
   }
+
+  /** Errors the compact line lists by name. */
+  private[graft] val compactErrorCap = 3
 
   /** Previous artifact's per-query seconds, parsed leniently (query keys
     * are `q<digits>_<snake>`; error values are quoted strings so the

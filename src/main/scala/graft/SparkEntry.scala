@@ -855,12 +855,9 @@ object SparkEntry {
     "q209_split_layout_drift" -> { (s, d) =>
       val docs = t(s, d, "documents")
       val fullTag = corpusTagOf(docs, d) + "#q209appended"
-      val appended = try {
-        val m = graft.sources.Bucketing
-          .freshTable(s, "graft_q209_drift_meta").head()
-        m.getAs[Int]("fmt") == DedupOps.bandedSplitIndexFormatVersion &&
-          m.getAs[String]("corpus_tag") == fullTag
-      } catch { case _: Exception => false }
+      val appended = graft.sources.IndexStore.isFresh(s, "graft_q209_drift",
+        Seq("meta"), Seq("fmt" -> DedupOps.bandedSplitIndexFormatVersion,
+          "corpus_tag" -> fullTag))
       if (!appended) {
         DedupOps.ensureBandedIndexSplit(docs.filter(col("doc_id") % 5 =!= 0),
           "graft_q209_drift", corpusTag = corpusTagOf(docs, d),
@@ -891,14 +888,12 @@ object SparkEntry {
       // alone can't witness the refreeze: a crash between the two would
       // replay as done. The drift audit is the refreeze's own postcondition
       // — zero outgrown — so the guard checks it directly (audit-sized)
-      val done = try {
-        val m = graft.sources.Bucketing
-          .freshTable(s, "graft_q210_refreeze_meta").head()
-        m.getAs[Int]("fmt") == DedupOps.bandedSplitIndexFormatVersion &&
-          m.getAs[String]("corpus_tag") == fullTag &&
-          DedupOps.bandedSplitLayoutDrift(s, "graft_q210_refreeze")
-            .agg(sum(col("n_outgrown"))).head().getLong(0) == 0L
-      } catch { case _: Exception => false }
+      val done = graft.sources.IndexStore.isFresh(s, "graft_q210_refreeze",
+        DedupOps.bandedSplitIndexTables,
+        Seq("fmt" -> DedupOps.bandedSplitIndexFormatVersion,
+          "corpus_tag" -> fullTag),
+        integrity = _ => DedupOps.bandedSplitLayoutDrift(s, "graft_q210_refreeze")
+          .agg(sum(col("n_outgrown"))).head().getLong(0) == 0L)
       if (!done) {
         DedupOps.ensureBandedIndexSplit(docs.filter(col("doc_id") % 5 =!= 0),
           "graft_q210_refreeze", corpusTag = corpusTagOf(docs, d),

@@ -22,8 +22,26 @@ import org.apache.spark.sql.types._
   * stay far below 2^31 — but the Int accumulation is kept anyway so even a
   * pathological overflow would wrap identically); code tiebreak is
   * first-minimum (`array_position(ds, array_min(ds))`).
+  *
+  * Input contract: [[PqCodes]] and [[PqMinDists]] FAIL LOUDLY (an
+  * [[IllegalArgumentException]] naming the expression) on a vector shorter
+  * than numSub · subDim or with a null element among those slots — an
+  * unchecked read there returns garbage codes, not an error. A NULL vector
+  * still yields NULL.
   */
-object PqExpressions
+object PqExpressions {
+  private[functions] def checkVector(arr: ArrayData, need: Int,
+                                     name: String): Unit = {
+    if (arr.numElements() < need) throw new IllegalArgumentException(
+      s"$name: vector has ${arr.numElements()} elements, the codebook needs $need")
+    var i = 0
+    while (i < need) {
+      if (arr.isNullAt(i)) throw new IllegalArgumentException(
+        s"$name: vector element $i is null")
+      i += 1
+    }
+  }
+}
 
 /** All `numSub` PQ codes of a quantized int vector under a frozen integer
   * codebook, as ONE native call: array<int> of 0-based nearest-centroid
@@ -59,6 +77,7 @@ object PqCodes {
   def compute(arr: ArrayData, cb: Array[Array[Array[Int]]]): ArrayData = {
     val numSub = cb.length
     val subDim = cb(0)(0).length
+    PqExpressions.checkVector(arr, numSub * subDim, "pq_codes")
     val out = new Array[Int](numSub)
     var m = 0
     while (m < numSub) {
@@ -121,6 +140,7 @@ object PqMinDists {
   def compute(arr: ArrayData, cb: Array[Array[Array[Int]]]): ArrayData = {
     val numSub = cb.length
     val subDim = cb(0)(0).length
+    PqExpressions.checkVector(arr, numSub * subDim, "pq_min_dists")
     val out = new Array[Long](numSub)
     var m = 0
     while (m < numSub) {

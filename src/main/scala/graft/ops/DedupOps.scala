@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sources.{Bucketing, IndexStore}
 
 /** Deduplication operators for training-data pipelines: exact (hash groupBy),
   * MinHash+LSH banding with exact-Jaccard verification, SimHash with banded
@@ -213,17 +214,8 @@ object DedupOps {
       .filter(col("pb") > col("pa") && col("pb") <= col("pa") + w)
       .select(col("a"), col("b"))
     val hashed = shingleHashSets(df, textCol, idCol, shingleK, scope)
-    cand
-      .join(hashed.select(col("id").as("a"), col("hs").as("hsa"),
-        col("sz").as("sza")), Seq("a"))
-      .join(hashed.select(col("id").as("b"), col("hs").as("hsb"),
-        col("sz").as("szb")), Seq("b"))
-      .withColumn("inter",
-        size(array_intersect(col("hsa"), col("hsb"))).cast("long"))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sza") + col("szb") - col("inter")))
-      .filter(col("jaccard") >= lit(minJaccard))
-      .select(col("a"), col("b"), col("inter"), col("jaccard"))
+    verifyJaccard(cand, hashed, hashed, minJaccard)
+      .withColumn("inter", col("inter").cast("long"))
   }
 
   /** k-wide MinHash signatures as k columns `s0..s{k-1}` from (id, h)
@@ -304,6 +296,34 @@ object DedupOps {
                         maxBucket: Int = 1000): DataFrame =
     candidatesFromBanded(bandedSigs(sigs, k, bands), maxBucket)
 
+  /** Exact-Jaccard verification of candidate pairs (a, b) against
+    * shingle-set frames (id, hs, sz) — `setsA` keyed by a, `setsB` by b:
+    * (a, b, inter, jaccard) for the pairs at or above `minJaccard`.
+    */
+  private def verifyJaccard(cand: DataFrame, setsA: DataFrame,
+                            setsB: DataFrame, minJaccard: Double): DataFrame = {
+    val sa = setsA.select(col("id").as("a"), col("hs").as("hsa"), col("sz").as("sza"))
+    val sb = setsB.select(col("id").as("b"), col("hs").as("hsb"), col("sz").as("szb"))
+    cand.join(sa, Seq("a")).join(sb, Seq("b"))
+      .withColumn("inter", size(array_intersect(col("hsa"), col("hsb"))))
+      .withColumn("jaccard",
+        col("inter").cast("double") / (col("sza") + col("szb") - col("inter")))
+      .filter(col("jaccard") >= lit(minJaccard))
+      .select(col("a"), col("b"), col("inter"), col("jaccard"))
+  }
+
+  /** The batch-probe report: per `batch` doc, its verified corpus near-dup
+    * count (pairs a = batch id) and `novel` = no match.
+    */
+  private def noveltyReport(batch: DataFrame, idCol: String,
+                            verified: DataFrame): DataFrame = {
+    val matches = verified.groupBy(col("a")).agg(count(lit(1)).as("n_matches"))
+    batch.select(col(idCol))
+      .join(matches.select(col("a").as(idCol), col("n_matches")), Seq(idCol), "left")
+      .na.fill(0L, Seq("n_matches"))
+      .select(col(idCol), col("n_matches"), (col("n_matches") === 0).as("novel"))
+  }
+
   /** MinHash near-dup pipeline with exact verification: LSH candidates →
     * exact Jaccard over the shingle-hash sets → keep pairs ≥ `minJaccard`.
     * The rerank join touches only candidate pairs (broadcast — candidates
@@ -322,18 +342,10 @@ object DedupOps {
     // aggregate form's separate signature shuffle is gone
     val hashed = shingleHashSets(df, textCol, idCol, shingleK, scope)
     val cand = candidatesFromBanded(bandedSigsNative(hashed, k, bands), maxBucket)
-    val a = hashed.select(col("id").as("a"), col("hs").as("hsa"), col("sz").as("sza"))
-    val b = hashed.select(col("id").as("b"), col("hs").as("hsb"), col("sz").as("szb"))
     // no broadcast hint: AQE broadcasts the candidate side while it is small,
     // and a duplicate-heavy corpus (candidates ~ dup-cluster²) can exceed
     // broadcast limits — the id-keyed shuffle join is the safe default
-    cand
-      .join(a, Seq("a")).join(b, Seq("b"))
-      .withColumn("inter", size(array_intersect(col("hsa"), col("hsb"))))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sza") + col("szb") - col("inter")))
-      .filter(col("jaccard") >= lit(minJaccard))
-      .select(col("a"), col("b"), col("inter"), col("jaccard"))
+    verifyJaccard(cand, hashed, hashed, minJaccard)
   }
 
   /** HOT-BUCKET split for the MinHash banded tier — the SRP hot-direction
@@ -425,15 +437,8 @@ object DedupOps {
         Seq("band_idx", "band_sig", "sub"))
       .filter(col("a") < col("b"))
       .select(col("a"), col("b")).distinct()
-    val a = hashed.select(col("id").as("a"), col("hs").as("hsa"), col("sz").as("sza"))
-    val b = hashed.select(col("id").as("b"), col("hs").as("hsb"), col("sz").as("szb"))
-    cand.join(a, Seq("a")).join(b, Seq("b"))
-      .withColumn("inter", size(array_intersect(col("hsa"), col("hsb"))))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sza") + col("szb") - col("inter")))
-      .filter(col("jaccard") >= lit(minJaccard))
-      .select(col("a"), col("b"), col("inter").cast("long").as("inter"),
-        col("jaccard"))
+    verifyJaccard(cand, hashed, hashed, minJaccard)
+      .withColumn("inter", col("inter").cast("long"))
   }
 
   /** Band a shingle-set frame at a FROZEN hot-cell split layout: members
@@ -506,7 +511,6 @@ object DedupOps {
                             splitOccupancy: Long = 64L,
                             scope: CacheScope = CacheScope.default): Unit = {
     require(splitOccupancy >= 1, "splitOccupancy must be >= 1")
-    import graft.sources.Bucketing
     val spark = corpus.sparkSession
     val sets = shingleHashSets(corpus, textCol, idCol, shingleK, scope)
     val banded = scope.register(bandedSigsNative(sets, k, bands))
@@ -533,15 +537,17 @@ object DedupOps {
       counted.filter(col("bn2") > maxBucket)
         .select(col("band_idx"), col("band_sig"), col("sub")).distinct(),
       s"${tablePrefix}_dropped")
-    import spark.implicits._
-    Bucketing.saveTable(Seq.empty[Long].toDF("id"), s"${tablePrefix}_deleted")
-    Bucketing.saveTable(
-      Seq((k, bands, shingleK, maxBucket, buckets, corpusTag,
-          splitOccupancy, 1L, bandedSplitIndexFormatVersion))
-        .toDF("k", "bands", "shingle_k", "max_bucket", "buckets",
-          "corpus_tag", "split_occupancy", "layout_ver", "fmt"),
-      s"${tablePrefix}_meta")
+    IndexStore.clearTombstones(spark, tablePrefix)
+    IndexStore.writeMeta(spark, tablePrefix, splitStamp(k, bands, shingleK,
+      maxBucket, buckets, corpusTag, splitOccupancy))
   }
+
+  private def splitStamp(k: Int, bands: Int, shingleK: Int, maxBucket: Int,
+                         buckets: Int, corpusTag: String,
+                         splitOccupancy: Long): IndexStore.Stamp =
+    bandedStamp(k, bands, shingleK, maxBucket, buckets, corpusTag).init ++
+      Seq("split_occupancy" -> splitOccupancy, "layout_ver" -> 1L,
+        "fmt" -> bandedSplitIndexFormatVersion)
 
   /** The six tables a SPLIT banded index comprises. */
   val bandedSplitIndexTables: Seq[String] =
@@ -567,9 +573,8 @@ object DedupOps {
     */
   private[graft] def liveSplitBands(spark: org.apache.spark.sql.SparkSession,
                                     tablePrefix: String): DataFrame = {
-    val split = graft.sources.Bucketing
-      .freshTable(spark, s"${tablePrefix}_split")
-    graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_bands")
+    val split = Bucketing.freshTable(spark, s"${tablePrefix}_split")
+    Bucketing.freshTable(spark, s"${tablePrefix}_bands")
       .join(broadcast(split), Seq("band_idx", "band_sig"), "left")
       .filter(col("fver").isNull || col("lver") >= col("fver"))
       .select(col("band_idx"), col("band_sig"), col("sub"), col("id"))
@@ -577,7 +582,9 @@ object DedupOps {
 
   /** [[ensureBandedIndex]] for the split layout: rebuild only when the
     * tables, the meta row (tag + every build parameter incl.
-    * `split_occupancy`), or the bands⊆sets integrity invariant disagree.
+    * `split_occupancy`; `layout_ver` moves with refreezes and is not
+    * compared), or the bands⊆sets integrity invariant disagree — the
+    * [[graft.sources.IndexStore]] stale policy.
     */
   def ensureBandedIndexSplit(corpus: DataFrame, tablePrefix: String,
                              corpusTag: String,
@@ -588,30 +595,10 @@ object DedupOps {
                              splitOccupancy: Long = 64L,
                              scope: CacheScope = CacheScope.default): Unit = {
     val spark = corpus.sparkSession
-    val upToDate = try {
-      bandedSplitIndexTables
-        .forall(s => spark.catalog.tableExists(s"${tablePrefix}_$s")) && {
-        val m = graft.sources.Bucketing
-          .freshTable(spark, s"${tablePrefix}_meta").head()
-        m.schema.fieldNames.contains("split_occupancy") &&
-          m.schema.fieldNames.contains("layout_ver") &&
-          m.getAs[Int]("fmt") == bandedSplitIndexFormatVersion &&
-          m.getAs[String]("corpus_tag") == corpusTag &&
-          m.getAs[Int]("k") == k && m.getAs[Int]("bands") == bands &&
-          m.getAs[Int]("shingle_k") == shingleK &&
-          m.getAs[Int]("max_bucket") == maxBucket &&
-          m.getAs[Int]("buckets") == buckets &&
-          m.getAs[Long]("split_occupancy") == splitOccupancy
-      } && {
-        graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_bands")
-          .select(col("id"))
-          .join(graft.sources.Bucketing
-              .freshTable(spark, s"${tablePrefix}_sets").select(col("id")),
-            Seq("id"), "left_anti")
-          .isEmpty
-      }
-    } catch { case _: Exception => false }
-    if (!upToDate)
+    val expect = splitStamp(k, bands, shingleK, maxBucket, buckets, corpusTag,
+      splitOccupancy).filter(_._1 != "layout_ver")
+    if (!IndexStore.isFresh(spark, tablePrefix, bandedSplitIndexTables, expect,
+        Seq("layout_ver"), _ => bandsInSets(spark, tablePrefix)))
       writeBandedIndexSplit(corpus, tablePrefix, textCol, idCol, k, bands,
         shingleK, maxBucket, buckets, corpusTag, splitOccupancy, scope)
   }
@@ -628,44 +615,24 @@ object DedupOps {
                             scope: CacheScope = CacheScope.default)
       : DataFrame = {
     val spark = batch.sparkSession
-    val meta = graft.sources.Bucketing
-      .freshTable(spark, s"${tablePrefix}_meta").head()
+    val meta = IndexStore.meta(spark, tablePrefix)
     val (k, bands, shingleK) =
       (meta.getAs[Int]("k"), meta.getAs[Int]("bands"),
         meta.getAs[Int]("shingle_k"))
-    val splitCells = graft.sources.Bucketing
-      .freshTable(spark, s"${tablePrefix}_split")
+    val splitCells = Bucketing.freshTable(spark, s"${tablePrefix}_split")
       .select(col("band_idx"), col("band_sig"))
     val bandC = liveSplitBands(spark, tablePrefix)
-    val setsC = graft.sources.Bucketing
-      .freshTable(spark, s"${tablePrefix}_sets")
+    val setsC = Bucketing.freshTable(spark, s"${tablePrefix}_sets")
     val setsB = shingleHashSets(batch, textCol, idCol, shingleK, scope)
     val bandB = bandSplitFrozenMinhash(setsB, splitCells, k, bands)
-    val cand = bandB
+    val cand = IndexStore.live(bandB
       .select(col("band_idx"), col("band_sig"), col("sub"), col("id").as("a"))
       .join(bandC.select(col("band_idx"), col("band_sig"), col("sub"),
           col("id").as("b")),
         Seq("band_idx", "band_sig", "sub"))
-      .select(col("a"), col("b")).distinct()
-      .join(broadcast(graft.sources.Bucketing
-          .freshTable(spark, s"${tablePrefix}_deleted")
-          .select(col("id").as("b"))),
-        Seq("b"), "left_anti")
-    val sa = setsB.select(col("id").as("a"), col("hs").as("hsa"),
-      col("sz").as("sza"))
-    val sb = setsC.select(col("id").as("b"), col("hs").as("hsb"),
-      col("sz").as("szb"))
-    val matches = cand.join(sa, Seq("a")).join(sb, Seq("b"))
-      .withColumn("inter", size(array_intersect(col("hsa"), col("hsb"))))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sza") + col("szb") - col("inter")))
-      .filter(col("jaccard") >= lit(minJaccard))
-      .groupBy(col("a")).agg(count(lit(1)).as("n_matches"))
-    batch.select(col(idCol))
-      .join(matches.select(col("a").as(idCol), col("n_matches")),
-        Seq(idCol), "left")
-      .na.fill(0L, Seq("n_matches"))
-      .select(col(idCol), col("n_matches"), (col("n_matches") === 0).as("novel"))
+      .select(col("a"), col("b")).distinct(),
+      IndexStore.tombstones(spark, tablePrefix), "b")
+    noveltyReport(batch, idCol, verifyJaccard(cand, setsB, setsC, minJaccard))
   }
 
   /** [[appendToBandedIndex]] for the split layout: the batch bands at the
@@ -675,12 +642,10 @@ object DedupOps {
     * semi-join-pruned to the batch's touched keys. Same crash order as
     * v3: sets insert before bands.
     *
-    * At-least-once REPLAY is a structural no-op (the kNN-maintain rule):
-    * batch ids already present in `_sets` anti-join away, so a retry of
-    * an append that committed its inserts but crashed before the
-    * `newCorpusTag` meta restamp inserts nothing and just restamps —
-    * without this, the replay would duplicate the batch's `_sets`/`_bands`
-    * rows and inflate every occupancy the drift audit reads.
+    * At-least-once REPLAY is a structural no-op: the batch passes
+    * [[graft.sources.IndexStore.admit]] against `_sets`, so a retry of an
+    * append that committed its inserts but crashed before the
+    * `newCorpusTag` meta restamp inserts nothing and just restamps.
     */
   def appendToBandedIndexSplit(batch: DataFrame, tablePrefix: String,
                                textCol: String = "text",
@@ -688,20 +653,13 @@ object DedupOps {
                                newCorpusTag: String = "",
                                scope: CacheScope = CacheScope.default): Unit = {
     val spark = batch.sparkSession
-    import graft.sources.Bucketing
-    val meta = Bucketing.freshTable(spark, s"${tablePrefix}_meta").head()
+    val meta = IndexStore.meta(spark, tablePrefix)
     val (k, bands, shingleK, maxBucket) =
       (meta.getAs[Int]("k"), meta.getAs[Int]("bands"),
         meta.getAs[Int]("shingle_k"), meta.getAs[Int]("max_bucket"))
-    val sets = shingleHashSets(batch, textCol, idCol, shingleK, scope)
-      .join(broadcast(Bucketing.freshTable(spark, s"${tablePrefix}_deleted")),
-        Seq("id"), "left_anti")
-      // replayed ids drop structurally — the corpus side reads only the
-      // id column of the id-bucketed `_sets` (batch-sized left, pruned
-      // corpus scan right)
-      .join(Bucketing.freshTable(spark, s"${tablePrefix}_sets")
-          .select(col("id")),
-        Seq("id"), "left_anti")
+    val sets = IndexStore.admit(
+      shingleHashSets(batch, textCol, idCol, shingleK, scope), tablePrefix,
+      Bucketing.freshTable(spark, s"${tablePrefix}_sets"))
     val splitT = Bucketing.freshTable(spark, s"${tablePrefix}_split")
     val splitCells = splitT.select(col("band_idx"), col("band_sig"))
     // the layout version the batch bands AT: meta's stamp, or the newest
@@ -710,43 +668,21 @@ object DedupOps {
     // under the heal's completed layout instead of dying with lver < fver
     val lver = math.max(meta.getAs[Long]("layout_ver"),
       splitT.agg(coalesce(max(col("fver")), lit(1L))).head().getLong(0))
-    val keyed = bandSplitFrozenMinhash(sets, splitCells, k, bands)
-      .join(Bucketing.freshTable(spark, s"${tablePrefix}_dropped"),
-        Seq("band_idx", "band_sig", "sub"), "left_anti")
-    val touched = keyed
-      .select(col("band_idx"), col("band_sig"), col("sub")).distinct()
-    val existing = liveSplitBands(spark, tablePrefix)
-      .join(broadcast(touched), Seq("band_idx", "band_sig", "sub"),
-        "left_semi")
-      .groupBy(col("band_idx"), col("band_sig"), col("sub"))
-      .agg(count(lit(1)).as("bn0"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band_idx"), col("band_sig"), col("sub"))
-      .orderBy(col("id"))
-    val capped = keyed.withColumn("rn", row_number().over(w))
-      .join(existing, Seq("band_idx", "band_sig", "sub"), "left")
-      .na.fill(0L, Seq("bn0"))
-      .filter(col("rn") + col("bn0") <= maxBucket)
-      .select(col("band_idx"), col("band_sig"), col("sub"), col("id"),
-        lit(lver).as("lver"))
+    val capped = capToOpenSlots(
+      bandSplitFrozenMinhash(sets, splitCells, k, bands),
+      Seq("band_idx", "band_sig", "sub"),
+      Bucketing.freshTable(spark, s"${tablePrefix}_dropped"),
+      liveSplitBands(spark, tablePrefix), maxBucket)
     // materialize before any insert: the plan reads _bands, which the
     // second insert mutates (localCheckpoint is eager — the returned
     // frame serves from checkpoint blocks, never the mutated table)
-    val cappedM = capped.localCheckpoint(true)
+    val cappedM = capped.withColumn("lver", lit(lver)).localCheckpoint(true)
     sets.select(col("id"), col("hs"), col("sz"))
       .write.insertInto(s"${tablePrefix}_sets")
     cappedM.write.insertInto(s"${tablePrefix}_bands")
-    if (newCorpusTag.nonEmpty) {
-      val buckets = meta.getAs[Int]("buckets")
-      val so = meta.getAs[Long]("split_occupancy")
-      import spark.implicits._
-      Bucketing.saveTable(
-        Seq((k, bands, shingleK, maxBucket, buckets, newCorpusTag, so,
-            lver, bandedSplitIndexFormatVersion))
-          .toDF("k", "bands", "shingle_k", "max_bucket", "buckets",
-            "corpus_tag", "split_occupancy", "layout_ver", "fmt"),
-        s"${tablePrefix}_meta")
-    }
+    if (newCorpusTag.nonEmpty)
+      IndexStore.writeMeta(spark, tablePrefix, IndexStore.restamped(meta,
+        "corpus_tag" -> newCorpusTag, "layout_ver" -> lver))
   }
 
   /** LAYOUT-DRIFT audit for the SPLIT banded index
@@ -780,9 +716,7 @@ object DedupOps {
     */
   def bandedSplitLayoutDrift(spark: org.apache.spark.sql.SparkSession,
                              tablePrefix: String): DataFrame = {
-    import graft.sources.Bucketing
-    val so = Bucketing.freshTable(spark, s"${tablePrefix}_meta").head()
-      .getAs[Long]("split_occupancy")
+    val so = IndexStore.meta(spark, tablePrefix).getAs[Long]("split_occupancy")
     val frozen = Bucketing.freshTable(spark, s"${tablePrefix}_split")
       .select(col("band_idx"), col("band_sig"), lit(true).as("frozen"))
     val subOcc = liveSplitBands(spark, tablePrefix)
@@ -855,8 +789,7 @@ object DedupOps {
     */
   def refreezeBandedIndexSplit(spark: org.apache.spark.sql.SparkSession,
                                tablePrefix: String): Unit = {
-    import graft.sources.Bucketing
-    val meta = Bucketing.freshTable(spark, s"${tablePrefix}_meta").head()
+    val meta = IndexStore.meta(spark, tablePrefix)
     val (k, bands, maxBucket, so, l) =
       (meta.getAs[Int]("k"), meta.getAs[Int]("bands"),
         meta.getAs[Int]("max_bucket"), meta.getAs[Long]("split_occupancy"),
@@ -933,14 +866,8 @@ object DedupOps {
     // 3. COMMIT: the layout version moves; tag and every build parameter
     // survive (a refreeze never changes corpus membership, so ensure's
     // up-to-date check must keep passing)
-    import spark.implicits._
-    Bucketing.saveTable(
-      Seq((k, bands, meta.getAs[Int]("shingle_k"), maxBucket,
-          meta.getAs[Int]("buckets"), meta.getAs[String]("corpus_tag"),
-          so, fver, bandedSplitIndexFormatVersion))
-        .toDF("k", "bands", "shingle_k", "max_bucket", "buckets",
-          "corpus_tag", "split_occupancy", "layout_ver", "fmt"),
-      s"${tablePrefix}_meta")
+    IndexStore.writeMeta(spark, tablePrefix,
+      IndexStore.restamped(meta, "layout_ver" -> fver))
   }
 
   /** Theoretical LSH collision probability 1-(1-J^r)^b at the threshold,
@@ -1081,18 +1008,7 @@ object DedupOps {
       .join(cappedC.select(col("band_idx"), col("band_sig"), col("id").as("b")),
         Seq("band_idx", "band_sig"))
       .select(col("a"), col("b")).distinct()
-    val sa = setsB.select(col("id").as("a"), col("hs").as("hsa"), col("sz").as("sza"))
-    val sb = setsC.select(col("id").as("b"), col("hs").as("hsb"), col("sz").as("szb"))
-    val matches = cand.join(sa, Seq("a")).join(sb, Seq("b"))
-      .withColumn("inter", size(array_intersect(col("hsa"), col("hsb"))))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sza") + col("szb") - col("inter")))
-      .filter(col("jaccard") >= lit(minJaccard))
-      .groupBy(col("a")).agg(count(lit(1)).as("n_matches"))
-    batch.select(col(idCol))
-      .join(matches.select(col("a").as(idCol), col("n_matches")), Seq(idCol), "left")
-      .na.fill(0L, Seq("n_matches"))
-      .select(col(idCol), col("n_matches"), (col("n_matches") === 0).as("novel"))
+    noveltyReport(batch, idCol, verifyJaccard(cand, setsB, setsC, minJaccard))
   }
 
   /** BUILD the persisted corpus index behind [[probeBandedIndex]] — the
@@ -1119,7 +1035,6 @@ object DedupOps {
                        maxBucket: Int = 10000, buckets: Int = 8,
                        corpusTag: String = "",
                        scope: CacheScope = CacheScope.default): Unit = {
-    import graft.sources.Bucketing
     val sets = shingleHashSets(corpus, textCol, idCol, shingleK, scope)
     val banded = scope.register(bandedSigsNative(sets, k, bands))
     val w = org.apache.spark.sql.expressions.Window
@@ -1145,17 +1060,29 @@ object DedupOps {
         .select(col("band_idx"), col("band_sig")),
       s"${tablePrefix}_dropped")
     val spark = corpus.sparkSession
-    import spark.implicits._
-    // empty id-tombstone table: [[deleteFromBandedIndex]] fills it,
-    // probes anti-join it, [[compactBandedIndex]] folds it back in
-    Bucketing.saveTable(Seq.empty[Long].toDF("id"), s"${tablePrefix}_deleted")
-    Bucketing.saveTable(
-      Seq((k, bands, shingleK, maxBucket, buckets, corpusTag,
-          bandedIndexFormatVersion))
-        .toDF("k", "bands", "shingle_k", "max_bucket", "buckets",
-          "corpus_tag", "fmt"),
-      s"${tablePrefix}_meta")
+    IndexStore.clearTombstones(spark, tablePrefix)
+    IndexStore.writeMeta(spark, tablePrefix,
+      bandedStamp(k, bands, shingleK, maxBucket, buckets, corpusTag))
   }
+
+  private def bandedStamp(k: Int, bands: Int, shingleK: Int, maxBucket: Int,
+                          buckets: Int, corpusTag: String): IndexStore.Stamp =
+    Seq("k" -> k, "bands" -> bands, "shingle_k" -> shingleK,
+      "max_bucket" -> maxBucket, "buckets" -> buckets,
+      "corpus_tag" -> corpusTag, "fmt" -> bandedIndexFormatVersion)
+
+  /** The banded indexes' integrity invariant: every band row's id has a
+    * shingle-set row. The crash-safe insert order (sets before bands)
+    * keeps it true through torn appends, so a violation means a corrupted
+    * index. One int-column anti-join with a limit-1 early exit, paid once
+    * per ensure, not per probe.
+    */
+  private def bandsInSets(spark: org.apache.spark.sql.SparkSession,
+                          tablePrefix: String): Boolean =
+    Bucketing.freshTable(spark, s"${tablePrefix}_bands").select(col("id"))
+      .join(Bucketing.freshTable(spark, s"${tablePrefix}_sets").select(col("id")),
+        Seq("id"), "left_anti")
+      .isEmpty
 
   /** The five tables a banded index comprises (suffixes of `tablePrefix`). */
   val bandedIndexTables: Seq[String] = Seq("bands", "sets", "dropped", "deleted", "meta")
@@ -1170,10 +1097,11 @@ object DedupOps {
     */
   val bandedIndexFormatVersion: Int = 3
 
-  /** Build the banded index ONLY IF the persisted one is stale: a no-op
-    * when all three tables exist and the meta row matches both `corpusTag`
-    * (the caller's statement of which corpus the index describes — e.g. the
-    * source directory) and every build parameter. This is what lets a
+  /** Build the banded index ONLY IF the persisted one is stale (the
+    * [[graft.sources.IndexStore]] stale policy): a no-op when every table
+    * exists, the meta row matches both `corpusTag` (the caller's statement
+    * of which corpus the index describes — e.g. the source directory) and
+    * every build parameter, and bands⊆sets holds. This is what lets a
     * benchmark or repeated pipeline pay the index build ONCE and measure
     * probes, while a changed corpus/parameter set still forces a rebuild —
     * and, with the session-idempotent writes in [[graft.sources.Bucketing]],
@@ -1186,31 +1114,9 @@ object DedupOps {
                         maxBucket: Int = 10000, buckets: Int = 8,
                         scope: CacheScope = CacheScope.default): Unit = {
     val spark = corpus.sparkSession
-    val upToDate = try {
-      bandedIndexTables
-        .forall(s => spark.catalog.tableExists(s"${tablePrefix}_$s")) && {
-        val m = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_meta").head()
-        m.schema.fieldNames.contains("corpus_tag") &&
-          m.schema.fieldNames.contains("fmt") &&
-          m.getAs[Int]("fmt") == bandedIndexFormatVersion &&
-          m.getAs[String]("corpus_tag") == corpusTag &&
-          m.getAs[Int]("k") == k && m.getAs[Int]("bands") == bands &&
-          m.getAs[Int]("shingle_k") == shingleK &&
-          m.getAs[Int]("max_bucket") == maxBucket &&
-          m.getAs[Int]("buckets") == buckets
-      } && {
-        // integrity invariant: every band row's id has a shingle-set row.
-        // The crash-safe insert order (sets before bands) keeps this true
-        // through torn appends, so a violation means a corrupted index —
-        // rebuild. One int-column anti-join with a limit-1 early exit,
-        // paid once per session per ensure, not per probe.
-        graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_bands").select(col("id"))
-          .join(graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_sets").select(col("id")),
-            Seq("id"), "left_anti")
-          .isEmpty
-      }
-    } catch { case _: Exception => false }
-    if (!upToDate)
+    if (!IndexStore.isFresh(spark, tablePrefix, bandedIndexTables,
+        bandedStamp(k, bands, shingleK, maxBucket, buckets, corpusTag),
+        integrity = _ => bandsInSets(spark, tablePrefix)))
       writeBandedIndex(corpus, tablePrefix, textCol, idCol, k, bands,
         shingleK, maxBucket, buckets, corpusTag, scope)
   }
@@ -1246,24 +1152,16 @@ object DedupOps {
                           newCorpusTag: String = "",
                           scope: CacheScope = CacheScope.default): Unit = {
     val spark = batch.sparkSession
-    val meta = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_meta").head()
+    val meta = IndexStore.meta(spark, tablePrefix)
     val (k, bands, shingleK, maxBucket) =
       (meta.getAs[Int]("k"), meta.getAs[Int]("bands"),
         meta.getAs[Int]("shingle_k"), meta.getAs[Int]("max_bucket"))
-    // a TOMBSTONED id cannot re-append before a compact: the tombstone
-    // suppresses its stale rows at probe time, so new rows under the same
-    // id would vanish with them (and resurface stale ones after a naive
-    // un-tombstone). Skip such rows; [[maintainBandedIndexFromDiff]]
-    // compacts first so changed docs never hit this filter.
-    // REPLAYED ids drop structurally too (the split-layout append's
-    // rule): a retry of an append that committed its inserts but crashed
-    // before the meta restamp must not duplicate the batch's rows.
-    val sets = shingleHashSets(batch, textCol, idCol, shingleK, scope)
-      .join(broadcast(graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted")),
-        Seq("id"), "left_anti")
-      .join(graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_sets")
-          .select(col("id")),
-        Seq("id"), "left_anti")
+    // tombstoned and replayed ids drop ([[graft.sources.IndexStore.admit]]);
+    // [[maintainBandedIndexFromDiff]] compacts first so changed docs
+    // never hit the tombstone filter
+    val sets = IndexStore.admit(
+      shingleHashSets(batch, textCol, idCol, shingleK, scope), tablePrefix,
+      Bucketing.freshTable(spark, s"${tablePrefix}_sets"))
     // materialize BEFORE any insert, as an EAGER LOCAL CHECKPOINT (the
     // split path's rule), never a CacheManager entry: the plan reads
     // _bands (mutated by the second insert) AND — via the replay guard —
@@ -1277,16 +1175,9 @@ object DedupOps {
     sets.select(col("id"), col("hs"), col("sz"))
       .write.insertInto(s"${tablePrefix}_sets")
     cappedM.write.insertInto(s"${tablePrefix}_bands")
-    if (newCorpusTag.nonEmpty) {
-      val buckets = meta.getAs[Int]("buckets")
-      import spark.implicits._
-      graft.sources.Bucketing.saveTable(
-        Seq((k, bands, shingleK, maxBucket, buckets, newCorpusTag,
-            bandedIndexFormatVersion))
-          .toDF("k", "bands", "shingle_k", "max_bucket", "buckets",
-            "corpus_tag", "fmt"),
-        s"${tablePrefix}_meta")
-    }
+    if (newCorpusTag.nonEmpty)
+      IndexStore.writeMeta(spark, tablePrefix,
+        IndexStore.restamped(meta, "corpus_tag" -> newCorpusTag))
   }
 
   /** The append's capped-rows plan, split out so its scale shape is
@@ -1298,147 +1189,80 @@ object DedupOps {
                                          k: Int, bands: Int,
                                          maxBucket: Int): DataFrame = {
     val spark = sets.sparkSession
-    val banded = bandedSigsNative(sets, k, bands)
-      .join(graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_dropped"),
-        Seq("band_idx", "band_sig"), "left_anti")
-    val touched = banded.select(col("band_idx"), col("band_sig")).distinct()
-    val existing = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_bands")
-      .join(broadcast(touched), Seq("band_idx", "band_sig"), "left_semi")
-      .groupBy(col("band_idx"), col("band_sig")).agg(count(lit(1)).as("bn0"))
-    // per-ROW cap, not all-or-nothing: rows fill the bucket's remaining
-    // slots in (deterministic) id order; only the overflow drops. An
-    // all-rows-or-none filter would reject a whole batch bucket because
-    // ONE slot was missing
+    capToOpenSlots(bandedSigsNative(sets, k, bands),
+      Seq("band_idx", "band_sig"),
+      Bucketing.freshTable(spark, s"${tablePrefix}_dropped"),
+      Bucketing.freshTable(spark, s"${tablePrefix}_bands"), maxBucket)
+  }
+
+  /** The banded appends' write-time cap: batch band rows (`keys` + id)
+    * minus cells the build closed (`dropped`), row-numbered into each
+    * cell's remaining slots against the `existing` rows' count, which is
+    * semi-join pruned to the batch's touched keys before aggregating (the
+    * key set broadcasts, so append I/O scales with the batch). Per-ROW, not
+    * all-or-nothing: rows fill the remaining slots in (deterministic) id
+    * order and only the overflow drops.
+    */
+  private def capToOpenSlots(rows: DataFrame, keys: Seq[String],
+                             dropped: DataFrame, existing: DataFrame,
+                             maxBucket: Int): DataFrame = {
+    val kc = keys.map(col)
+    val open = rows.join(dropped, keys, "left_anti")
+    val counts = existing
+      .join(broadcast(open.select(kc: _*).distinct()), keys, "left_semi")
+      .groupBy(kc: _*).agg(count(lit(1)).as("bn0"))
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band_idx"), col("band_sig")).orderBy(col("id"))
-    banded.withColumn("rn", row_number().over(w))
-      .join(existing, Seq("band_idx", "band_sig"), "left")
+      .partitionBy(kc: _*).orderBy(col("id"))
+    open.withColumn("rn", row_number().over(w))
+      .join(counts, keys, "left")
       .na.fill(0L, Seq("bn0"))
       .filter(col("rn") + col("bn0") <= maxBucket)
-      .select(col("band_idx"), col("band_sig"), col("id"))
+      .select(kc :+ col("id"): _*)
   }
 
   /** TOMBSTONE corpus ids out of the persisted banded index — the DELETE
     * of the incremental-crawl lifecycle (docs that vanished from the
     * source, takedowns, [[graft.ops.RelationalOps.snapshotDiff]]'s
-    * `removed`/`changed` feed). The index's bucketed tables are immutable
-    * files, so deletion is LOGICAL: ids land in the small `_deleted` table
-    * and [[probeBandedIndex]] anti-joins candidates against it (batch-
-    * scaled work — the tombstone set broadcasts). Physical removal is
+    * `removed`/`changed` feed): [[graft.sources.IndexStore.tombstone]].
+    * Probes anti-join candidates against the tombstones (batch-scaled
+    * work — the set broadcasts); physical removal is
     * [[compactBandedIndex]]'s job, amortized over many deletes.
-    *
-    * The `_deleted` rewrite is read-merge-replace of a CHURN-sized table
-    * (never corpus-sized); the merged frame is materialized (eager local
-    * checkpoint) before the replace because the new table's plan reads the
-    * old one. Idempotent: re-deleting an id is a no-op. A crash mid-replace
-    * loses tombstones — the delete feed must be replayable (re-run the
-    * delta), the same contract as every destructive-first rebuild here.
     */
   def deleteFromBandedIndex(ids: DataFrame, tablePrefix: String,
-                            idCol: String = "doc_id"): Unit = {
-    val spark = ids.sparkSession
-    val merged = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted")
-      .unionByName(ids.select(col(idCol).cast("long").as("id")))
-      .distinct()
-      .localCheckpoint(true)
-    graft.sources.Bucketing.saveTable(merged, s"${tablePrefix}_deleted")
-  }
+                            idCol: String = "doc_id"): Unit =
+    IndexStore.tombstone(ids, tablePrefix, idCol)
 
-  /** COMPACT the persisted banded index: physically drop every tombstoned
-    * id's band and set rows and empty `_deleted` — the amortized rewrite
-    * that keeps probe-side anti-joins small and makes tombstoned ids
-    * APPENDABLE again (an un-compacted id cannot be re-appended: its stale
-    * rows would resurface the moment the tombstone lifted, so
-    * [[appendToBandedIndex]] skips such ids until a compact).
-    *
-    * Corpus-sized I/O by design (each surviving row is rewritten once into
-    * the same bucketed layout) — run it when the tombstone set has grown,
-    * not per delete. Crash order: `_bands` rewrites BEFORE `_sets` (a crash
-    * between the two leaves orphan sets rows — harmless — and trips
-    * [[ensureBandedIndex]]'s invariant no further than the bands⊆sets check
-    * it already survives), and `_deleted` clears LAST, so a crash at any
-    * table BOUNDARY leaves tombstones in force and probes stay correct.
-    * Each rewrite itself is NOT crash-atomic:
-    * [[graft.sources.Bucketing.writeBucketed]] is destructive-first (drop,
-    * then write — see its docstring), so a crash mid-rewrite loses that
-    * table and the index is rebuilt from the corpus via
-    * [[ensureBandedIndex]]; compacting under a fresh prefix and repointing
-    * consumers closes even that window.
+  /** COMPACT the persisted banded index: [[graft.sources.IndexStore.compact]]
+    * over `_bands` then `_sets`, each rewritten in its own bucket layout.
+    * That order keeps a crash between the two rewrites to orphan sets rows
+    * — harmless, and inside [[ensureBandedIndex]]'s bands⊆sets invariant.
     */
   def compactBandedIndex(tablePrefix: String): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val meta = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_meta").head()
-    val buckets = meta.getAs[Int]("buckets")
-    val deleted = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted")
-    if (!deleted.isEmpty) {
-      // re-select the canonical column order: a USING join puts the join
-      // key first, and later appends insertInto POSITIONALLY
-      val bandsKeep = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_bands")
-        .join(broadcast(deleted), Seq("id"), "left_anti")
-        .select(col("band_idx"), col("band_sig"), col("id"))
-        .localCheckpoint(true)
-      val setsKeep = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_sets")
-        .join(broadcast(deleted), Seq("id"), "left_anti")
-        .select(col("id"), col("hs"), col("sz"))
-        .localCheckpoint(true)
-      graft.sources.Bucketing.writeBucketed(bandsKeep,
-        s"${tablePrefix}_bands", Seq("band_idx", "band_sig"), buckets)
-      graft.sources.Bucketing.writeBucketed(setsKeep,
-        s"${tablePrefix}_sets", Seq("id"), buckets)
-      import spark.implicits._
-      graft.sources.Bucketing.saveTable(
-        Seq.empty[Long].toDF("id"), s"${tablePrefix}_deleted")
-    }
+    val buckets = IndexStore.meta(spark, tablePrefix).getAs[Int]("buckets")
+    IndexStore.compact(spark, tablePrefix, buckets, Seq(
+      IndexStore.liveMember(spark, tablePrefix, "bands",
+        Seq("band_idx", "band_sig")),
+      IndexStore.liveMember(spark, tablePrefix, "sets", Seq("id"))))
   }
 
   /** Fold a [[graft.ops.RelationalOps.snapshotDiff]] delta into the
-    * persisted banded index — the composed incremental-crawl maintenance
-    * path: `removed` and `changed` ids tombstone out; if anything CHANGED,
-    * the index compacts (a changed id re-appends under the same id, which
-    * needs its stale rows physically gone — pure removals stay logical and
-    * cheap); then `added` + `changed` docs append with their new text. The
+    * persisted banded index: [[graft.sources.IndexStore.maintainFromDiff]]
+    * with this index's compact and append. Pure removals stay logical and
+    * cheap; a changed or re-added id forces one amortized compact. The
     * result is probe-equivalent to an index rebuilt from the new snapshot
-    * (asserted in BucketingSpec), at delta cost when nothing changed in
-    * place and one amortized rewrite when something did.
+    * (asserted in BucketingSpec).
     */
   def maintainBandedIndexFromDiff(newSnapshot: DataFrame, diff: DataFrame,
                                   tablePrefix: String,
                                   textCol: String = "text",
                                   idCol: String = "doc_id",
                                   newCorpusTag: String = "",
-                                  scope: CacheScope = CacheScope.default): Unit = {
-    val spark0 = newSnapshot.sparkSession
-    val gone = diff.filter(col("status").isin("removed", "changed"))
-      .select(col(idCol))
-    if (!gone.isEmpty) deleteFromBandedIndex(gone, tablePrefix, idCol)
-    val fresh = newSnapshot.join(
-      diff.filter(col("status").isin("added", "changed")).select(col(idCol)),
-      Seq(idCol), "left_semi")
-    // compact whenever an id ABOUT TO APPEND is tombstoned — `changed` ids
-    // from this delta, but ALSO ids re-ADDED after a removals-only earlier
-    // cycle left their tombstone in place: without the compact the append's
-    // anti-join would silently drop them and the index would diverge from
-    // the new snapshot
-    val appendingTombstoned = fresh.select(col(idCol).as("id"))
-      .join(graft.sources.Bucketing.freshTable(spark0, s"${tablePrefix}_deleted"), Seq("id"), "left_semi")
-    if (!appendingTombstoned.isEmpty) compactBandedIndex(tablePrefix)
-    if (!fresh.isEmpty)
-      appendToBandedIndex(fresh, tablePrefix, textCol, idCol,
-        newCorpusTag, scope)
-    else if (newCorpusTag.nonEmpty) {
-      val spark = newSnapshot.sparkSession
-      val meta = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_meta").head()
-      import spark.implicits._
-      graft.sources.Bucketing.saveTable(
-        Seq((meta.getAs[Int]("k"), meta.getAs[Int]("bands"),
-            meta.getAs[Int]("shingle_k"), meta.getAs[Int]("max_bucket"),
-            meta.getAs[Int]("buckets"), newCorpusTag,
-            bandedIndexFormatVersion))
-          .toDF("k", "bands", "shingle_k", "max_bucket", "buckets",
-            "corpus_tag", "fmt"),
-        s"${tablePrefix}_meta")
-    }
-  }
+                                  scope: CacheScope = CacheScope.default): Unit =
+    IndexStore.maintainFromDiff(newSnapshot, diff, tablePrefix, idCol,
+      newCorpusTag)(() => compactBandedIndex(tablePrefix),
+      fresh => appendToBandedIndex(fresh, tablePrefix, textCol, idCol,
+        scope = scope))
 
   /** CORPUS-WIDE verified near-dup pairs served FROM the persisted index —
     * the other direction the index pays for itself: [[probeBandedIndex]]
@@ -1463,14 +1287,14 @@ object DedupOps {
     */
   def bandedIndexStats(spark: org.apache.spark.sql.SparkSession,
                        tablePrefix: String): DataFrame = {
-    val meta = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_meta")
+    val meta = Bucketing.freshTable(spark, s"${tablePrefix}_meta")
       .select(col("corpus_tag"), col("fmt"), col("k"), col("bands"),
         col("max_bucket"))
-    val deleted = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted")
-    val live = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_sets")
-      .join(broadcast(deleted), Seq("id"), "left_anti")
-    val bands = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_bands")
-      .join(broadcast(deleted), Seq("id"), "left_anti")
+    val deleted = IndexStore.tombstones(spark, tablePrefix)
+    val live = IndexStore.live(
+      Bucketing.freshTable(spark, s"${tablePrefix}_sets"), deleted)
+    val bands = IndexStore.live(
+      Bucketing.freshTable(spark, s"${tablePrefix}_bands"), deleted)
     val bandAgg = bands.agg(count(lit(1)).as("n_band_rows"),
       count_distinct(col("band_idx"), col("band_sig")).as("n_buckets"))
     val maxBucket = bands.groupBy(col("band_idx"), col("band_sig"))
@@ -1480,7 +1304,7 @@ object DedupOps {
       .crossJoin(broadcast(bandAgg))
       .crossJoin(broadcast(maxBucket))
       .crossJoin(broadcast(deleted.agg(count(lit(1)).as("n_tombstones"))))
-      .crossJoin(broadcast(graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_dropped")
+      .crossJoin(broadcast(Bucketing.freshTable(spark, s"${tablePrefix}_dropped")
         .agg(count(lit(1)).as("n_dropped_buckets"))))
       .crossJoin(broadcast(meta))
   }
@@ -1488,24 +1312,17 @@ object DedupOps {
   def corpusPairsFromIndex(spark: org.apache.spark.sql.SparkSession,
                            tablePrefix: String,
                            minJaccard: Double = 0.8): DataFrame = {
-    val bands = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_bands")
-    val deleted = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted")
-    val cand = bands.select(col("band_idx"), col("band_sig"), col("id").as("a"))
-      .join(bands.select(col("band_idx"), col("band_sig"), col("id").as("b")),
-        Seq("band_idx", "band_sig"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b")).distinct()
-      .join(broadcast(deleted.select(col("id").as("a"))), Seq("a"), "left_anti")
-      .join(broadcast(deleted.select(col("id").as("b"))), Seq("b"), "left_anti")
-    val sets = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_sets")
-    val sa = sets.select(col("id").as("a"), col("hs").as("hsa"), col("sz").as("sza"))
-    val sb = sets.select(col("id").as("b"), col("hs").as("hsb"), col("sz").as("szb"))
-    cand.join(sa, Seq("a")).join(sb, Seq("b"))
-      .withColumn("inter", size(array_intersect(col("hsa"), col("hsb"))))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sza") + col("szb") - col("inter")))
-      .filter(col("jaccard") >= lit(minJaccard))
-      .select(col("a"), col("b"), col("inter"), col("jaccard"))
+    val bands = Bucketing.freshTable(spark, s"${tablePrefix}_bands")
+    val deleted = IndexStore.tombstones(spark, tablePrefix)
+    val cand = IndexStore.live(IndexStore.live(
+      bands.select(col("band_idx"), col("band_sig"), col("id").as("a"))
+        .join(bands.select(col("band_idx"), col("band_sig"), col("id").as("b")),
+          Seq("band_idx", "band_sig"))
+        .filter(col("a") < col("b"))
+        .select(col("a"), col("b")).distinct(),
+      deleted, "a"), deleted, "b")
+    val sets = Bucketing.freshTable(spark, s"${tablePrefix}_sets")
+    verifyJaccard(cand, sets, sets, minJaccard)
   }
 
   /** Corpus-wide near-dup CLUSTERS from the persisted index: the
@@ -1520,9 +1337,7 @@ object DedupOps {
                               tablePrefix: String,
                               minJaccard: Double = 0.8,
                               idCol: String = "doc_id"): DataFrame = {
-    val vertices = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_sets").select(col("id"))
-      .join(broadcast(graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted")),
-        Seq("id"), "left_anti")
+    val vertices = IndexStore.liveTable(spark, tablePrefix, "sets")
       .select(col("id").as(idCol))
     GraphOps.connectedComponents(
       corpusPairsFromIndex(spark, tablePrefix, minJaccard), vertices, idCol)
@@ -1542,33 +1357,21 @@ object DedupOps {
                        minJaccard: Double = 0.8,
                        scope: CacheScope = CacheScope.default): DataFrame = {
     val spark = batch.sparkSession
-    val meta = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_meta").head()
+    val meta = IndexStore.meta(spark, tablePrefix)
     val (k, bands, shingleK) =
       (meta.getAs[Int]("k"), meta.getAs[Int]("bands"), meta.getAs[Int]("shingle_k"))
-    val bandC = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_bands")
-    val setsC = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_sets")
+    val bandC = Bucketing.freshTable(spark, s"${tablePrefix}_bands")
+    val setsC = Bucketing.freshTable(spark, s"${tablePrefix}_sets")
     val setsB = shingleHashSets(batch, textCol, idCol, shingleK, scope)
     val bandB = bandedSigsNative(setsB, k, bands)
-    val cand = bandB.select(col("band_idx"), col("band_sig"), col("id").as("a"))
-      .join(bandC.select(col("band_idx"), col("band_sig"), col("id").as("b")),
-        Seq("band_idx", "band_sig"))
-      .select(col("a"), col("b")).distinct()
-      // logical deletes: tombstoned corpus ids never match (batch-scaled
-      // anti-join against the broadcast churn-sized tombstone set)
-      .join(broadcast(graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted")
-        .select(col("id").as("b"))), Seq("b"), "left_anti")
-    val sa = setsB.select(col("id").as("a"), col("hs").as("hsa"), col("sz").as("sza"))
-    val sb = setsC.select(col("id").as("b"), col("hs").as("hsb"), col("sz").as("szb"))
-    val matches = cand.join(sa, Seq("a")).join(sb, Seq("b"))
-      .withColumn("inter", size(array_intersect(col("hsa"), col("hsb"))))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sza") + col("szb") - col("inter")))
-      .filter(col("jaccard") >= lit(minJaccard))
-      .groupBy(col("a")).agg(count(lit(1)).as("n_matches"))
-    batch.select(col(idCol))
-      .join(matches.select(col("a").as(idCol), col("n_matches")), Seq(idCol), "left")
-      .na.fill(0L, Seq("n_matches"))
-      .select(col(idCol), col("n_matches"), (col("n_matches") === 0).as("novel"))
+    // logical deletes: tombstoned corpus ids never match
+    val cand = IndexStore.live(
+      bandB.select(col("band_idx"), col("band_sig"), col("id").as("a"))
+        .join(bandC.select(col("band_idx"), col("band_sig"), col("id").as("b")),
+          Seq("band_idx", "band_sig"))
+        .select(col("a"), col("b")).distinct(),
+      IndexStore.tombstones(spark, tablePrefix), "b")
+    noveltyReport(batch, idCol, verifyJaccard(cand, setsB, setsC, minJaccard))
   }
 
   /** 60-bit SimHash fingerprints (id, simhash) from (id, h) shingle rows:

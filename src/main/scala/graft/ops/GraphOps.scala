@@ -339,31 +339,21 @@ object GraphOps {
 
   private val clusterIndexFormatVersion = 2
 
-  /** The committed meta pointer of a versioned assignment store: the
-    * max-`version` row of `${prefix}_meta`, or None when the store does
-    * not exist / has no committed row. The meta table is APPEND-ONLY —
-    * commit of snapshot v = appending its pointer row — so a crash at any
-    * point leaves the previous row the maximum, and the previous snapshot
-    * keeps serving (the [[graft.streaming.StreamingEvents.latestSnapshot]]
-    * rule, applied to tables).
-    */
-  private def clusterMetaHead(spark: org.apache.spark.sql.SparkSession,
-                              tablePrefix: String)
-      : Option[org.apache.spark.sql.Row] =
-    if (!spark.catalog.tableExists(s"${tablePrefix}_meta")) None
-    else {
-      val m = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_meta")
-      if (!Seq("fmt", "corpus_tag", "buckets", "version")
-          .forall(m.columns.contains)) None
-      else m.orderBy(col("version").desc).limit(1).collect().headOption
-    }
+  private val clusterMetaCols = Seq("fmt", "corpus_tag", "buckets", "version")
+
+  private def clusterStamp(corpusTag: String, buckets: Int,
+                           version: Long): graft.sources.IndexStore.Stamp =
+    clusterMetaCols.zip(
+      Seq(clusterIndexFormatVersion, corpusTag, buckets, version))
 
   /** PERSISTED cluster-assignment lifecycle — the production face of
     * [[incrementalComponents]] (the banded-index ensure/maintain
     * convention): the (id, comp) labeling lives as VERSIONED managed
     * tables `${prefix}_assign_v<N>` bucketed by `comp` (the relabel
     * join's key, so maintenance co-locates), with an APPEND-ONLY
-    * `${prefix}_meta` whose max-version row is the committed pointer.
+    * `${prefix}_meta` whose max-version row is the committed pointer
+    * ([[graft.sources.IndexStore.metaHead]] — a crash at any point leaves
+    * the previous row the maximum, and the previous snapshot serving).
     * Build once with global CC; fold each ingest in with the
     * quotient-graph step — compute O(batch + touched components); the
     * snapshot REWRITE is the copy-on-write price every versioned-state
@@ -385,17 +375,11 @@ object GraphOps {
                                idCol: String = "id",
                                buckets: Int = 8): Unit = {
     val spark = pairs.sparkSession
-    // a genuine read error (corrupt meta, permissions) must surface, not
-    // silently trigger a rebuild — only ABSENCE (no table / no committed
-    // row / a dangling pointer) means stale here, so the probe uses
-    // tableExists + explicit row checks instead of a broad try/catch
-    val upToDate = clusterMetaHead(spark, tablePrefix).exists { m =>
-      m.getAs[Int]("fmt") == clusterIndexFormatVersion &&
-        m.getAs[String]("corpus_tag") == corpusTag &&
-        m.getAs[Int]("buckets") == buckets &&
-        spark.catalog.tableExists(
-          s"${tablePrefix}_assign_v${m.getAs[Long]("version")}")
-    }
+    // a dangling pointer (the named snapshot is gone) is stale too
+    val upToDate = graft.sources.IndexStore.isFresh(spark, tablePrefix,
+      Seq("meta"), clusterStamp(corpusTag, buckets, 0L).init, Seq("version"),
+      m => spark.catalog.tableExists(
+        s"${tablePrefix}_assign_v${m.getAs[Long]("version")}"))
     if (!upToDate) {
       val asg = connectedComponents(pairs, vertices, idCol)
         .select(col(idCol).cast("long").as("id"), col("comp"))
@@ -411,10 +395,8 @@ object GraphOps {
     */
   def clusterAssignments(spark: org.apache.spark.sql.SparkSession,
                          tablePrefix: String): DataFrame = {
-    val m = clusterMetaHead(spark, tablePrefix).getOrElse(
-      throw new IllegalStateException(
-        s"no committed cluster-assignment snapshot under '$tablePrefix' — " +
-          "run ensureClusterAssignments first"))
+    val m = graft.sources.IndexStore.committedMeta(spark, tablePrefix,
+      clusterMetaCols, "ensureClusterAssignments")
     spark.table(s"${tablePrefix}_assign_v${m.getAs[Long]("version")}")
       .select(col("id"), col("comp"))
   }
@@ -445,9 +427,8 @@ object GraphOps {
                                       asg: DataFrame, tablePrefix: String,
                                       corpusTag: String, buckets: Int,
                                       fresh: Boolean): Unit = {
-    import graft.sources.Bucketing
-    import spark.implicits._
-    val curVersion = clusterMetaHead(spark, tablePrefix)
+    import graft.sources.{Bucketing, IndexStore}
+    val curVersion = IndexStore.metaHead(spark, tablePrefix, clusterMetaCols)
       .map(_.getAs[Long]("version")).getOrElse(0L)
     val next = curVersion + 1L
     // (1) the new snapshot, under a name no reader resolves yet (a crash
@@ -457,11 +438,10 @@ object GraphOps {
     // (2) the commit: append the pointer row (a fresh ensure RECREATES
     // the meta table instead — stale pointer rows from a previous corpus
     // must not outrank the rebuild)
-    val row = Seq((clusterIndexFormatVersion, corpusTag, buckets, next))
-      .toDF("fmt", "corpus_tag", "buckets", "version")
+    val stamp = clusterStamp(corpusTag, buckets, next)
     if (fresh || !spark.catalog.tableExists(s"${tablePrefix}_meta"))
-      Bucketing.saveTable(row, s"${tablePrefix}_meta")
-    else row.write.mode("append").saveAsTable(s"${tablePrefix}_meta")
+      IndexStore.writeMeta(spark, tablePrefix, stamp)
+    else IndexStore.commitMeta(spark, tablePrefix, stamp)
     // (3) retention: keep current + previous only
     spark.catalog.listTables()
       .filter(t => t.name.startsWith(s"${tablePrefix}_assign_v"))
@@ -813,12 +793,13 @@ object GraphOps {
     // without decoding. Per-round data doubles (two tiny graphs instead
     // of one) but the round/job COUNT halves — the sampled-graph tier's
     // measured cost is per-round constants, not rows. Id contract:
-    // |id| < 2^62 (the engine's ids are row ids or 60-bit md5 hashes).
+    // |id| < 2^62 (the engine's ids are row ids or 60-bit md5 hashes);
+    // ids widen to long BEFORE the tag, so 32-bit ids ≥ 2^30 cannot wrap
+    // into another component's label.
     val truss = s"truss$k"
-    val ue = und
-      .select((col("a") * 2).as("a"), (col("b") * 2).as("b"))
-      .unionByName(trussE
-        .select((col("a") * 2 + 1).as("a"), (col("b") * 2 + 1).as("b")))
+    val (a2, b2) = (col("a").cast("long") * 2, col("b").cast("long") * 2)
+    val ue = und.select(a2.as("a"), b2.as("b"))
+      .unionByName(trussE.select((a2 + 1).as("a"), (b2 + 1).as("b")))
     val uv = ue.select(col("a").as("id"))
       .unionByName(ue.select(col("b").as("id"))).distinct()
     val comp = connectedComponents(ue, uv)

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sources.{Bucketing, IndexStore}
 
 /** Similarity search over embedding columns (`array<float>`): brute-force
   * cosine top-k and exact all-pairs as correctness baselines, and
@@ -472,7 +473,7 @@ object SimilarityOps {
                               idCol: String = "vec_id",
                               vecCol: String = "embedding"): DataFrame = {
     val spark = queries.sparkSession
-    val live = liveCells(spark, tablePrefix, "neighbor_id")
+    val live = IndexStore.liveTable(spark, tablePrefix, "cells", "neighbor_id")
       .select(col("neighbor_id").as(idCol), col("cv").as(vecCol))
     val ann = ivfTopKPersisted(queries, tablePrefix, k, nProbe, idCol, vecCol)
     annRecallAudit(live, queries, ann, k, idCol, vecCol)
@@ -1497,15 +1498,10 @@ object SimilarityOps {
     "min_cos", "n_tables", "dim", "buckets", "version", "epoch", "n_vecs",
     "target_occupancy", "split_occupancy")
 
-  private def knnMetaHead(spark: org.apache.spark.sql.SparkSession,
-                          tablePrefix: String)
-      : Option[org.apache.spark.sql.Row] =
-    if (!spark.catalog.tableExists(s"${tablePrefix}_meta")) None
-    else {
-      val m = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_meta")
-      if (!knnMetaCols.forall(m.columns.contains)) None
-      else m.orderBy(col("version").desc).limit(1).collect().headOption
-    }
+  /** The committed head of the append-only kNN meta table. */
+  private def knnMeta(spark: org.apache.spark.sql.SparkSession,
+                      tablePrefix: String): org.apache.spark.sql.Row =
+    IndexStore.committedMeta(spark, tablePrefix, knnMetaCols, "ensureKnnIndex")
 
   /** Refresh token of a committed kNN-index state: every commit (ensure
     * rebuild, maintain, delete, compact) moves at least one component, so
@@ -1533,23 +1529,20 @@ object SimilarityOps {
   private def committedRows(spark: org.apache.spark.sql.SparkSession,
                             tablePrefix: String, table: String,
                             token: String): DataFrame =
-    graft.sources.Bucketing.freshTableGated(spark,
+    Bucketing.freshTableGated(spark,
         s"${tablePrefix}_$table", token).join(
-      broadcast(graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_meta")
+      broadcast(Bucketing.freshTable(spark, s"${tablePrefix}_meta")
         .select(col("epoch")).distinct()),
       Seq("epoch"), "left_semi")
 
   /** [[committedRows]] minus the logical tombstones — the LIVE corpus
-    * view every kNN-index read and fold runs against. The `_deleted`
-    * table is churn-sized and broadcasts; physical removal is
-    * [[compactKnnIndex]]'s job.
+    * view every kNN-index read and fold runs against.
     */
   private def liveRows(spark: org.apache.spark.sql.SparkSession,
                        tablePrefix: String, table: String,
                        token: String): DataFrame =
-    committedRows(spark, tablePrefix, table, token).join(
-      broadcast(graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted")),
-      Seq("id"), "left_anti")
+    IndexStore.live(committedRows(spark, tablePrefix, table, token),
+      IndexStore.tombstones(spark, tablePrefix))
 
   /** The COMMITTED kept-list view over the delta-versioned `_kept` table:
     * rows stamped past the committed version are orphans from a crashed
@@ -1569,8 +1562,7 @@ object SimilarityOps {
                             restrictTo: Option[DataFrame] = None)
       : DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("v"))
-    val raw = graft.sources.Bucketing
-      .freshTableGated(spark, s"${tablePrefix}_kept", token)
+    val raw = Bucketing.freshTableGated(spark, s"${tablePrefix}_kept", token)
       .filter(col("kver") <= lit(version))
     // maintenance verbs need only a batch-sized vertex subset's lists:
     // restricting BEFORE the version window (whole vertices, so the
@@ -1785,22 +1777,18 @@ object SimilarityOps {
                      targetOccupancy: Long = 8L, buckets: Int = 8,
                      splitOccupancy: Long = 64L): Unit = {
     val spark = df.sparkSession
-    val upToDate = knnMetaHead(spark, tablePrefix).exists { m =>
-      m.getAs[Int]("fmt") == knnIndexFormatVersion &&
-        m.getAs[String]("corpus_tag") == corpusTag &&
-        m.getAs[Int]("ktop") == kTop &&
-        m.getAs[Double]("min_cos") == minCos &&
-        m.getAs[Int]("n_tables") == nTables &&
-        m.getAs[Int]("dim") == dim &&
-        m.getAs[Int]("buckets") == buckets &&
-        m.getAs[Long]("target_occupancy") == targetOccupancy &&
-        m.getAs[Long]("split_occupancy") == splitOccupancy &&
-        Seq(s"${tablePrefix}_vecs", s"${tablePrefix}_bands",
-          s"${tablePrefix}_deleted", s"${tablePrefix}_cells",
-          s"${tablePrefix}_kept")
-          .forall(spark.catalog.tableExists)
-    }
-    if (!upToDate) {
+    // the stamp; planes, version, epoch and n_vecs are derived state
+    def stamp(planes: Int, epoch: Long, n: Long): IndexStore.Stamp =
+      Seq("fmt" -> knnIndexFormatVersion, "corpus_tag" -> corpusTag,
+        "planes" -> planes, "ktop" -> kTop, "min_cos" -> minCos,
+        "n_tables" -> nTables, "dim" -> dim, "buckets" -> buckets,
+        "version" -> 1L, "epoch" -> epoch, "n_vecs" -> n,
+        "target_occupancy" -> targetOccupancy,
+        "split_occupancy" -> splitOccupancy)
+    val derived = Set("planes", "version", "epoch", "n_vecs")
+    if (!IndexStore.isFresh(spark, tablePrefix,
+        Seq("meta", "vecs", "bands", "deleted", "cells", "kept"),
+        stamp(0, 0L, 0L).filterNot(c => derived(c._1)), knnMetaCols)) {
       val base = df.select(col(idCol).cast("long").as("id"),
         col(vecCol).as("vec")).dropDuplicates("id")
       val n = base.count()
@@ -1813,8 +1801,6 @@ object SimilarityOps {
       val cells = splitCellsOf(banded, splitOccupancy,
         srpPlaneStride - planes).localCheckpoint(true)
       val epoch = epochIdOf(base)
-      import graft.sources.Bucketing
-      import spark.implicits._
       // fresh build: recreate the append-only tables; sweep stale
       // versioned tables (a previous corpus OR the pre-delta formats) so
       // the warehouse never accumulates unreachable snapshots
@@ -1844,16 +1830,10 @@ object SimilarityOps {
         pairsFromSplitBands(bandsT, vecsT, minCos, "id", "vec"), kTop)
       Bucketing.writeBucketed(kept.withColumn("kver", lit(1L)),
         s"${tablePrefix}_kept", Seq("v"), buckets)
-      Bucketing.saveTable(
-        spark.emptyDataset[Long].toDF("id"), s"${tablePrefix}_deleted")
+      IndexStore.clearTombstones(spark, tablePrefix)
       // the commit: meta RECREATES on a fresh build — stale rows from a
       // previous corpus must not keep orphan epochs visible
-      Bucketing.saveTable(
-        Seq((knnIndexFormatVersion, corpusTag, planes, kTop, minCos,
-          nTables, dim, buckets, 1L, epoch, n, targetOccupancy,
-          splitOccupancy))
-          .toDF(knnMetaCols: _*),
-        s"${tablePrefix}_meta")
+      IndexStore.writeMeta(spark, tablePrefix, stamp(planes, epoch, n))
     }
   }
 
@@ -1893,9 +1873,7 @@ object SimilarityOps {
                        vecCol: String = "embedding",
                        maxPlaneDrift: Int = 1): Unit = {
     val spark = batch.sparkSession
-    val m = knnMetaHead(spark, tablePrefix).getOrElse(
-      throw new IllegalStateException(
-        s"no committed kNN index under '$tablePrefix' — run ensureKnnIndex"))
+    val m = knnMeta(spark, tablePrefix)
     val token = knnToken(m)
     val v = m.getAs[Long]("version")
     val planes = m.getAs[Int]("planes")
@@ -1903,30 +1881,24 @@ object SimilarityOps {
     val minCos = m.getAs[Double]("min_cos")
     val nTables = m.getAs[Int]("n_tables")
     val dim = m.getAs[Int]("dim")
-    val splitOcc = m.getAs[Long]("split_occupancy")
     val targetOcc = m.getAs[Long]("target_occupancy")
     val vecs = liveRows(spark, tablePrefix, "vecs", token)
       .dropDuplicates("id")
     val bands = liveRows(spark, tablePrefix, "bands", token)
-    val cells = graft.sources.Bucketing.freshTableGated(spark,
-      s"${tablePrefix}_cells", token)
+    val cells = Bucketing.freshTableGated(spark, s"${tablePrefix}_cells",
+      token)
     import graft.functions.VectorExpressions.dotF
-    // replayed ids drop structurally; consumed by banding AND verify AND
-    // the inserts — materialize the (batch-sized) frame once. A
-    // TOMBSTONED id cannot re-enter before a compact (the banded-index
-    // X85 rule: the tombstone suppresses its stale committed rows, so a
-    // re-insert under the same id would vanish with them on read and
-    // resurface BOTH after a naive un-tombstone)
+    // tombstoned and replayed ids drop ([[graft.sources.IndexStore.admit]]
+    // against the COMMITTED vectors — a crashed epoch's orphan rows must
+    // re-fold on retry); consumed by banding AND verify AND the inserts —
+    // materialize the (batch-sized) frame once.
     // LAZY: the count() right below materializes it — one job, not
     // checkpoint-job + count-job (the epoch's job-count diet: every
     // intermediate here is materialized by a later action BEFORE the
     // inserts mutate the tables it reads, per the checkpointLazy rule)
-    val fresh = batch
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .dropDuplicates("id")
-      .join(vecs.select(col("id")), Seq("id"), "left_anti")
-      .join(broadcast(graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted")),
-        Seq("id"), "left_anti")
+    val fresh = IndexStore.admit(batch
+        .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
+        .dropDuplicates("id"), tablePrefix, vecs)
       .withColumn("nrm", sqrt(dotF(col("vec"), col("vec"))))
       .localCheckpoint(eager = false)
     val nFresh = fresh.count()
@@ -2005,8 +1977,6 @@ object SimilarityOps {
     // kept delta replaces the round-13 full O(n·kTop) snapshot rewrite.
     // Orphans from a crash anywhere below stay invisible until the meta
     // append commits this epoch (bands/vecs by epoch id, kept by kver).
-    import graft.sources.Bucketing
-    import spark.implicits._
     bandsNew.withColumn("epoch", lit(epoch))
       .select(col("id"), col("tbl"), col("bucket"), col("sub"), col("epoch"))
       .write.insertInto(s"${tablePrefix}_bands")
@@ -2015,11 +1985,8 @@ object SimilarityOps {
       .write.insertInto(s"${tablePrefix}_vecs")
     keptAppend.select(col("v"), col("nb"), col("cos"), col("kver"))
       .write.insertInto(s"${tablePrefix}_kept")
-    Seq((knnIndexFormatVersion, m.getAs[String]("corpus_tag"), planes,
-      kTop, minCos, nTables, dim, m.getAs[Int]("buckets"), next, epoch,
-      nNext, targetOcc, splitOcc))
-      .toDF(knnMetaCols: _*)
-      .write.mode("append").saveAsTable(s"${tablePrefix}_meta")
+    IndexStore.commitMeta(spark, tablePrefix, IndexStore.restamped(m,
+      "version" -> next, "epoch" -> epoch, "n_vecs" -> nNext))
   }
 
   /** The served graph: mutual edges ([[mutualEdges]]) of the committed
@@ -2034,16 +2001,11 @@ object SimilarityOps {
     */
   def knnIndexEdges(spark: org.apache.spark.sql.SparkSession,
                     tablePrefix: String): DataFrame = {
-    val m = knnMetaHead(spark, tablePrefix).getOrElse(
-      throw new IllegalStateException(
-        s"no committed kNN index under '$tablePrefix' — run ensureKnnIndex"))
-    val del = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted")
-    mutualEdges(
+    val m = knnMeta(spark, tablePrefix)
+    val del = IndexStore.tombstones(spark, tablePrefix)
+    mutualEdges(IndexStore.live(IndexStore.live(
       committedKept(spark, tablePrefix, m.getAs[Long]("version"),
-        knnToken(m))
-        .join(broadcast(del.select(col("id").as("v"))), Seq("v"), "left_anti")
-        .join(broadcast(del.select(col("id").as("nb"))), Seq("nb"),
-          "left_anti"))
+        knnToken(m)), del, "v"), del, "nb"))
   }
 
   /** TOMBSTONE vectors out of the persisted kNN graph — and, unlike the
@@ -2058,8 +2020,8 @@ object SimilarityOps {
     * to the batch recompute over the live corpus at the frozen operating
     * point (OpsSpec asserts it).
     *
-    * Protocol: `_deleted` merges first (read-merge-replace of a
-    * churn-sized table, the [[deleteFromIvfIndex]] shape), then the
+    * Protocol: `_deleted` merges first
+    * ([[graft.sources.IndexStore.tombstone]]), then the
     * repaired lists append to `_kept` as a touched-sized delta under the
     * next version stamp (a vertex repaired down to NO live neighbor gets
     * an empty-list marker so its stale rows stop serving), then the meta
@@ -2075,35 +2037,25 @@ object SimilarityOps {
   def deleteFromKnnIndex(ids: DataFrame, tablePrefix: String,
                          idCol: String = "vec_id"): Unit = {
     val spark = ids.sparkSession
-    val m = knnMetaHead(spark, tablePrefix).getOrElse(
-      throw new IllegalStateException(
-        s"no committed kNN index under '$tablePrefix' — run ensureKnnIndex"))
+    val m = knnMeta(spark, tablePrefix)
     val token = knnToken(m)
     val v = m.getAs[Long]("version")
-    val planes = m.getAs[Int]("planes")
     val kTop = m.getAs[Int]("ktop")
     val minCos = m.getAs[Double]("min_cos")
-    val before = graft.sources.Bucketing.freshTable(spark,
-      s"${tablePrefix}_deleted")
-    val merged = before
-      .unionByName(ids.select(col(idCol).cast("long").as("id")))
-      .distinct()
-      .localCheckpoint(true)
-    // grew = this call tombstoned at least one NEW id — even with no kept
-    // list to repair, the meta commit below must land so n_vecs (and the
-    // status/drift-guard arithmetic on it) tracks the live corpus
-    val grew = merged.count() > before.count()
-    import graft.sources.Bucketing
-    Bucketing.saveTable(merged, s"${tablePrefix}_deleted")
+    val nBefore = IndexStore.tombstones(spark, tablePrefix).count()
     // everything below uses the MATERIALIZED tombstone frame, never a
     // re-read of the table this call just replaced — a cloned session's
     // relation cache (streaming foreachBatch) can otherwise serve the
     // pre-replace file listing mid-call
-    val del = merged
+    val del = IndexStore.tombstone(ids, tablePrefix, idCol)
+    // grew = this call tombstoned at least one NEW id — even with no kept
+    // list to repair, the meta commit below must land so n_vecs (and the
+    // status/drift-guard arithmetic on it) tracks the live corpus
+    val grew = del.count() > nBefore
     // candidate vertices: any row of ANY version naming a tombstone — a
     // window-free superset that scopes the version window below to the
     // churn neighborhood instead of sorting the full O(n·kTop) state
-    val namedSuper = graft.sources.Bucketing
+    val namedSuper = Bucketing
       .freshTableGated(spark, s"${tablePrefix}_kept", token)
       .filter(col("kver") <= lit(v))
       .join(broadcast(del.select(col("id").as("nb"))), Seq("nb"),
@@ -2113,11 +2065,10 @@ object SimilarityOps {
     // touched = LIVE vertices whose LATEST kept list names ANY tombstoned
     // id — the full set, not just this call's: a crashed prior delete
     // left its vertices un-repaired and this pass self-heals them
-    val touched = kept
-      .join(broadcast(del.select(col("id").as("nb"))), Seq("nb"),
-        "left_semi")
-      .select(col("v"))
-      .join(broadcast(del.select(col("id").as("v"))), Seq("v"), "left_anti")
+    val touched = IndexStore.live(kept
+        .join(broadcast(del.select(col("id").as("nb"))), Seq("nb"),
+          "left_semi")
+        .select(col("v")), del, "v")
       .distinct()
       .localCheckpoint(true)
     val vecsLive = liveRows(spark, tablePrefix, "vecs", token)
@@ -2180,82 +2131,43 @@ object SimilarityOps {
     // view's semi-join simply never matches it
     val delEpoch = epochIdOf(
       del.select(concat(lit("del|"), col("id").cast("string")).as("id")))
-    import spark.implicits._
-    Seq((knnIndexFormatVersion, m.getAs[String]("corpus_tag"), planes,
-      kTop, minCos, m.getAs[Int]("n_tables"), m.getAs[Int]("dim"),
-      m.getAs[Int]("buckets"), next, delEpoch, nLive,
-      m.getAs[Long]("target_occupancy"), m.getAs[Long]("split_occupancy")))
-      .toDF(knnMetaCols: _*)
-      .write.mode("append").saveAsTable(s"${tablePrefix}_meta")
+    IndexStore.commitMeta(spark, tablePrefix, IndexStore.restamped(m,
+      "version" -> next, "epoch" -> delEpoch, "n_vecs" -> nLive))
   }
 
-  /** COMPACT the persisted kNN index: physically rewrite `_vecs`/`_bands`
-    * minus every tombstoned id (epoch stamps preserved — committed-epoch
-    * visibility survives the rewrite), collapse `_kept` to the committed
-    * live view (stale delta versions, empty-list markers, and dead
-    * vertices' rows all drop — the X219 cadence is where the
-    * delta-versioned layout pays its accumulated rent), and empty
-    * `_deleted`, making tombstoned ids APPENDABLE again. Corpus-sized I/O
-    * by design — run it when the tombstone set has grown, not per delete.
-    * Crash order: `_vecs`/`_bands`/`_kept` rewrites, `_deleted` clears,
-    * and the meta append lands LAST (its version bump is what tells a
-    * GATED cross-session reader the part-files moved), so a crash at any
-    * table boundary leaves tombstones in force and same-session reads
-    * stay correct; each rewrite itself is destructive-first (the
-    * [[compactBandedIndex]] contract — a crash mid-rewrite means rebuild
-    * via ensure under a new tag).
+  /** COMPACT the persisted kNN index: [[graft.sources.IndexStore.compact]]
+    * over `_vecs`/`_bands` (epoch stamps preserved — committed-epoch
+    * visibility survives the rewrite) and `_kept` collapsed to the
+    * committed live view (stale delta versions, empty-list markers, and
+    * dead vertices' rows all drop — the X219 cadence is where the
+    * delta-versioned layout pays its accumulated rent). The meta append
+    * lands after the core's tombstone clear: its version bump is what
+    * tells a GATED cross-session reader the part-files moved.
     */
   def compactKnnIndex(tablePrefix: String): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val m = knnMetaHead(spark, tablePrefix).getOrElse(
-      throw new IllegalStateException(
-        s"no committed kNN index under '$tablePrefix' — run ensureKnnIndex"))
+    val m = knnMeta(spark, tablePrefix)
     val token = knnToken(m)
     val v = m.getAs[Long]("version")
-    val buckets = m.getAs[Int]("buckets")
-    val deleted = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted")
-    if (deleted.isEmpty) return
-    import graft.sources.Bucketing
-    val vecsKeep = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_vecs")
-      .join(broadcast(deleted), Seq("id"), "left_anti")
-      .select(col("id"), col("vec"), col("nrm"), col("epoch"))
-      .localCheckpoint(true)
-    val bandsKeep = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_bands")
-      .join(broadcast(deleted), Seq("id"), "left_anti")
-      .select(col("id"), col("tbl"), col("bucket"), col("sub"), col("epoch"))
-      .localCheckpoint(true)
     // the committed live kept view collapsed to one physical version (the
     // delete protocol already repaired every live list naming a dead id,
     // so dropping dead-v rows is the only filter left)
-    val keptKeep = committedKept(spark, tablePrefix, v, token)
-      .join(broadcast(deleted.select(col("id").as("v"))), Seq("v"),
-        "left_anti")
-      .withColumn("kver", lit(v))
-      .select(col("v"), col("nb"), col("cos"), col("kver"))
-      .localCheckpoint(true)
-    Bucketing.writeBucketed(vecsKeep, s"${tablePrefix}_vecs", Seq("id"),
-      buckets)
-    Bucketing.writeBucketed(bandsKeep, s"${tablePrefix}_bands",
-      Seq("bucket"), buckets)
-    Bucketing.writeBucketed(keptKeep, s"${tablePrefix}_kept", Seq("v"),
-      buckets)
-    import spark.implicits._
-    Bucketing.saveTable(
-      spark.emptyDataset[Long].toDF("id"), s"${tablePrefix}_deleted")
-    // commit: the version bump is the signal that moves every gated
-    // reader's token past its cached (pre-rewrite) file listings. The
-    // salted epoch matches no data row, so committed-epoch visibility of
-    // the preserved stamps is unchanged
-    val compactEpoch = epochIdOf(
-      Seq(s"compact|$v").toDF("id"))
-    Seq((knnIndexFormatVersion, m.getAs[String]("corpus_tag"),
-      m.getAs[Int]("planes"), m.getAs[Int]("ktop"),
-      m.getAs[Double]("min_cos"), m.getAs[Int]("n_tables"),
-      m.getAs[Int]("dim"), buckets, v + 1L, compactEpoch,
-      m.getAs[Long]("n_vecs"), m.getAs[Long]("target_occupancy"),
-      m.getAs[Long]("split_occupancy")))
-      .toDF(knnMetaCols: _*)
-      .write.mode("append").saveAsTable(s"${tablePrefix}_meta")
+    val kept = IndexStore.Member("kept", Seq("v"), dead =>
+      IndexStore.live(committedKept(spark, tablePrefix, v, token), dead, "v")
+        .withColumn("kver", lit(v)))
+    if (IndexStore.compact(spark, tablePrefix, m.getAs[Int]("buckets"), Seq(
+        IndexStore.liveMember(spark, tablePrefix, "vecs", Seq("id")),
+        IndexStore.liveMember(spark, tablePrefix, "bands", Seq("bucket")),
+        kept))) {
+      // commit: the version bump is the signal that moves every gated
+      // reader's token past its cached (pre-rewrite) file listings. The
+      // salted epoch matches no data row, so committed-epoch visibility
+      // of the preserved stamps is unchanged
+      import spark.implicits._
+      val compactEpoch = epochIdOf(Seq(s"compact|$v").toDF("id"))
+      IndexStore.commitMeta(spark, tablePrefix, IndexStore.restamped(m,
+        "version" -> (v + 1L), "epoch" -> compactEpoch))
+    }
   }
 
   /** One-row OPERATING-POINT status of a persisted kNN index — the
@@ -2270,13 +2182,11 @@ object SimilarityOps {
     */
   def knnIndexStatus(spark: org.apache.spark.sql.SparkSession,
                      tablePrefix: String): DataFrame = {
-    val m = knnMetaHead(spark, tablePrefix).getOrElse(
-      throw new IllegalStateException(
-        s"no committed kNN index under '$tablePrefix' — run ensureKnnIndex"))
+    val m = knnMeta(spark, tablePrefix)
     val planes = m.getAs[Int]("planes")
     val n = m.getAs[Long]("n_vecs")
     val auto = autoPlanes(n, m.getAs[Long]("target_occupancy"))
-    val splitCells = graft.sources.Bucketing.freshTableGated(spark,
+    val splitCells = Bucketing.freshTableGated(spark,
       s"${tablePrefix}_cells", knnToken(m)).count()
     import spark.implicits._
     Seq((m.getAs[Long]("version"), n, planes, auto, auto - planes,
@@ -2438,20 +2348,22 @@ object SimilarityOps {
     val model = km.fit(vecs)
     val members = model.transform(vecs)
       .select(col("cell"), col("id").as("neighbor_id"), col("v").as("cv"))
-    graft.sources.Bucketing.writeBucketed(members, s"${tablePrefix}_cells",
+    Bucketing.writeBucketed(members, s"${tablePrefix}_cells",
       Seq("cell"), buckets)
-    graft.sources.Bucketing.saveTable(
+    Bucketing.saveTable(
       model.clusterCenters.zipWithIndex
         .map { case (c, i) => (i, c.toArray) }.toSeq
         .toDF("cell", "center"),
       s"${tablePrefix}_centroids")
-    graft.sources.Bucketing.saveTable(
-      Seq.empty[Long].toDF("id"), s"${tablePrefix}_deleted")
-    graft.sources.Bucketing.saveTable(
-      Seq((nCells, seed, buckets, corpusTag, ivfIndexFormatVersion))
-        .toDF("n_cells", "seed", "buckets", "corpus_tag", "fmt"),
-      s"${tablePrefix}_meta")
+    IndexStore.clearTombstones(spark, tablePrefix)
+    IndexStore.writeMeta(spark, tablePrefix,
+      ivfStamp(nCells, seed, buckets, corpusTag))
   }
+
+  private def ivfStamp(nCells: Int, seed: Long, buckets: Int,
+                       corpusTag: String): IndexStore.Stamp =
+    Seq("n_cells" -> nCells, "seed" -> seed, "buckets" -> buckets,
+      "corpus_tag" -> corpusTag, "fmt" -> ivfIndexFormatVersion)
 
   /** CORPUS-WIDE semantic near-dup pairs served FROM the persisted IVF
     * index — the embedding twin of
@@ -2463,24 +2375,11 @@ object SimilarityOps {
     * quantizer already made for probes — [[ivfDriftReport]] is the signal
     * to retrain when that trade degrades.
     */
-  /** The LIVE (non-tombstoned) members of a persisted index's cells
-    * table: the bucketed scan anti-joined against the broadcast
-    * churn-sized `_deleted` set. The bucket layout — and with it every
-    * exchange-free probe plan — survives a broadcast anti-join, so
-    * logical deletes cost batch-scaled work on every read path until
-    * [[compactIvfIndex]] amortizes them away physically. */
-  private[graft] def liveCells(spark: org.apache.spark.sql.SparkSession,
-                               tablePrefix: String, memberId: String): DataFrame =
-    graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_cells").join(
-      broadcast(graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted")
-        .withColumnRenamed("id", memberId)),
-      Seq(memberId), "left_anti")
-
   def semanticPairsFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
                                 tablePrefix: String,
                                 minCos: Double = 0.9): DataFrame = {
     import graft.functions.VectorExpressions.dotF
-    val cells = liveCells(spark, tablePrefix, "neighbor_id")
+    val cells = IndexStore.liveTable(spark, tablePrefix, "cells", "neighbor_id")
     // norms once per ROW before the join (bruteForceTopK's lemma: the
     // same expression evaluated once is bit-identical and drops the
     // per-pair work to one dot + one divide)
@@ -2503,7 +2402,7 @@ object SimilarityOps {
                                    tablePrefix: String,
                                    minCos: Double = 0.9,
                                    idCol: String = "vec_id"): DataFrame = {
-    val vertices = liveCells(spark, tablePrefix, "neighbor_id")
+    val vertices = IndexStore.liveTable(spark, tablePrefix, "cells", "neighbor_id")
       .select(col("neighbor_id").as(idCol))
     GraphOps.connectedComponents(
       semanticPairsFromIvfIndex(spark, tablePrefix, minCos), vertices, idCol)
@@ -2518,37 +2417,34 @@ object SimilarityOps {
     */
   val ivfIndexFormatVersion: Int = 3
 
-  /** Build the IVF index ONLY IF the persisted one is stale — the ANN twin
-    * of [[graft.ops.DedupOps.ensureBandedIndex]]: a no-op when the three
-    * tables exist and the meta row matches `corpusTag` (the caller's
-    * statement of corpus identity) and the quantizer parameters; otherwise
-    * a full rebuild, which the session-idempotent writes make safe over any
-    * leftover warehouse state.
+  /** Build the IVF index ONLY IF the persisted one is stale (the
+    * [[graft.sources.IndexStore]] stale policy): a no-op when the tables
+    * exist and the meta row matches `corpusTag` and the quantizer
+    * parameters; otherwise a full rebuild, which the session-idempotent
+    * writes make safe over any leftover warehouse state.
     */
   def ensureIvfIndex(df: DataFrame, tablePrefix: String, corpusTag: String,
                      nCells: Int = 16, seed: Long = 4667979835606274383L,
                      idCol: String = "vec_id", vecCol: String = "embedding",
                      buckets: Int = 8,
                      scope: CacheScope = CacheScope.default): Unit = {
-    val spark = df.sparkSession
-    val upToDate = try {
-      Seq("cells", "centroids", "meta", "deleted")
-        .forall(s => spark.catalog.tableExists(s"${tablePrefix}_$s")) && {
-        val m = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_meta").head()
-        m.schema.fieldNames.contains("fmt") &&
-          m.getAs[Int]("fmt") == ivfIndexFormatVersion &&
-          m.getAs[String]("corpus_tag") == corpusTag &&
-          m.getAs[Int]("n_cells") == nCells && m.getAs[Long]("seed") == seed &&
-          m.getAs[Int]("buckets") == buckets
-      }
-    } catch { case _: Exception => false }
-    if (!upToDate)
+    if (!IndexStore.isFresh(df.sparkSession, tablePrefix,
+        Seq("cells", "centroids", "meta", "deleted"),
+        ivfStamp(nCells, seed, buckets, corpusTag)))
       writeIvfIndex(df, tablePrefix, nCells, seed, idCol, vecCol, buckets,
         corpusTag, scope)
   }
 
-  /** APPEND a batch of vectors into the persisted IVF index — the ANN twin
-    * of [[graft.ops.DedupOps.appendToBandedIndex]]: new vectors are
+  /** The persisted IVF quantizer's centers, in cell order (nCells rows). */
+  private def ivfCenters(spark: org.apache.spark.sql.SparkSession,
+                         tablePrefix: String): Array[Array[Double]] =
+    Bucketing.freshTable(spark, s"${tablePrefix}_centroids")
+      .orderBy(col("cell"))
+      .collect().map(_.getAs[scala.collection.Seq[Double]]("center").toArray)
+
+  /** APPEND a batch of vectors into the persisted IVF index: the batch
+    * passes [[graft.sources.IndexStore.admit]] (tombstoned and already
+    * present ids skip, so a replayed append inserts nothing), the rest are
     * assigned to their nearest EXISTING centroid (the quantizer stays
     * frozen — nCells rows read driver-side, broadcast, compiled
     * distance loop per batch row) and `insertInto` the bucketed cells
@@ -2566,19 +2462,13 @@ object SimilarityOps {
                        vecCol: String = "embedding"): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val centers: Array[Array[Double]] = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_centroids")
-      .orderBy(col("cell"))
-      .collect().map(_.getAs[scala.collection.Seq[Double]]("center").toArray)
+    val centers = ivfCenters(spark, tablePrefix)
     val bcCenters = spark.sparkContext.broadcast(centers)
-    // an un-compacted tombstoned id cannot be re-appended: its stale cells
-    // rows would resurface the moment the tombstone lifted — skip such ids
-    // until a [[compactIvfIndex]] (the banded-index append contract)
-    val dels = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted")
-    val admissible = batch.join(broadcast(dels),
-      batch(idCol).cast("long") === dels("id"), "left_anti")
-    val assigned = admissible
-      .select(col(idCol).cast("long").as("neighbor_id"),
-        col(vecCol).cast("array<float>").as("cv"))
+    val assigned = IndexStore.admit(batch
+        .select(col(idCol).cast("long").as("neighbor_id"),
+          col(vecCol).cast("array<float>").as("cv")),
+        tablePrefix, Bucketing.freshTable(spark, s"${tablePrefix}_cells"),
+        "neighbor_id")
       .as[(Long, Array[Float])]
       .mapPartitions { rows =>
         val cents = bcCenters.value
@@ -2597,156 +2487,47 @@ object SimilarityOps {
     assigned.write.insertInto(s"${tablePrefix}_cells")
   }
 
-  /** LOGICAL delete from a persisted IVF or IVF-PQ index — the embedding
-    * twin of [[graft.ops.DedupOps.deleteFromBandedIndex]] (both index
-    * kinds share the `_deleted` (id) tombstone-table shape, so one entry
-    * point serves both): ids merge into the churn-sized tombstone table;
-    * every probe, report and corpus self-join anti-joins members against
-    * its broadcast — batch-scaled work, the corpus files never rewrite —
-    * and the appends skip tombstoned ids until a compact (their stale
-    * cells rows would resurface the moment the tombstone lifted).
-    * Physical removal is [[compactIvfIndex]]'s amortized job. Idempotent:
-    * re-deleting an id is a no-op. A crash mid-replace loses tombstones —
-    * the delete feed must be replayable (re-run the delta), the banded
-    * index's contract.
-    *
-    * Without this, a crawl delta that REMOVES documents leaves their
-    * embeddings serving: [[semanticPairsFromIvfIndex]] and every probe
-    * would keep matching deleted content.
+  /** LOGICAL delete from a persisted IVF or IVF-PQ index
+    * ([[graft.sources.IndexStore.tombstone]]): every probe, report and
+    * corpus self-join reads live members only, and the appends skip
+    * tombstoned ids until a [[compactIvfIndex]]. Without it, a crawl delta
+    * that REMOVES documents leaves their embeddings serving.
     */
   def deleteFromIvfIndex(ids: DataFrame, tablePrefix: String,
-                         idCol: String = "vec_id"): Unit = {
-    val spark = ids.sparkSession
-    val merged = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted")
-      .unionByName(ids.select(col(idCol).cast("long").as("id")))
-      .distinct()
-      .localCheckpoint(true)
-    graft.sources.Bucketing.saveTable(merged, s"${tablePrefix}_deleted")
-  }
+                         idCol: String = "vec_id"): Unit =
+    IndexStore.tombstone(ids, tablePrefix, idCol)
 
-  /** COMPACT a persisted IVF or IVF-PQ index: physically rewrite `_cells`
-    * minus every tombstoned id in the SAME bucketed-by-cell layout
-    * (exchange-free probes survive — BucketingSpec asserts) and empty
-    * `_deleted` — the amortized corpus-sized rewrite that keeps probe-side
-    * anti-joins small and makes tombstoned ids APPENDABLE again. Handles
-    * both cells schemas (IVF's `neighbor_id` vector rows, IVF-PQ's
-    * `vec_id` code rows). Crash order: `_cells` rewrites FIRST and
-    * `_deleted` clears LAST, so a crash BETWEEN the two leaves tombstones
-    * in force over already-removed rows (an anti-join that removes
-    * nothing) — probes stay correct across that window. The rewrite
-    * itself is NOT crash-atomic: [[graft.sources.Bucketing.writeBucketed]]
-    * is destructive-first (drop, then write — see its docstring for why a
-    * rename swap isn't available to bucketed catalog tables), so a crash
-    * mid-rewrite leaves no `_cells` table and the index must be rebuilt
-    * from the corpus via the ensure path. An operation that cannot afford
-    * that window compacts under a FRESH prefix and repoints consumers —
-    * the corpus of record, not the index, is the durable store either way.
+  /** COMPACT a persisted IVF or IVF-PQ index: [[graft.sources.IndexStore.compact]]
+    * of `_cells` in its bucketed-by-cell layout (exchange-free probes
+    * survive — BucketingSpec asserts). Handles both cells schemas (IVF's
+    * `neighbor_id` vector rows, IVF-PQ's `vec_id` code rows).
     */
   def compactIvfIndex(tablePrefix: String): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
-    import spark.implicits._
-    val buckets = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_meta").head()
-      .getAs[Int]("buckets")
-    val deleted = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted")
-    if (!deleted.isEmpty) {
-      val cells = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_cells")
-      val memberId =
-        if (cells.columns.contains("neighbor_id")) "neighbor_id" else "vec_id"
-      // canonical column order preserved: anti-join keeps the left side's
-      // columns, and later appends insertInto POSITIONALLY
-      val keep = cells
-        .join(broadcast(deleted.withColumnRenamed("id", memberId)),
-          Seq(memberId), "left_anti")
-        .select(cells.columns.map(col): _*)
-        .localCheckpoint(true)
-      graft.sources.Bucketing.writeBucketed(keep, s"${tablePrefix}_cells",
-        Seq("cell"), buckets)
-      graft.sources.Bucketing.saveTable(
-        Seq.empty[Long].toDF("id"), s"${tablePrefix}_deleted")
-    }
-  }
-
-  /** Restamp a meta row's corpus tag in place (every other field and the
-    * format stamp carry over) — the maintenance paths' way of recording
-    * "this index now reflects snapshot X" without a rebuild.
-    * SCHEMA-GENERIC (works for the IVF and IVF-PQ meta shapes alike): the
-    * row is rewritten column-for-column with only `corpus_tag` replaced,
-    * materialized (localCheckpoint) before [[graft.sources.Bucketing.saveTable]]
-    * drops the table it was read from.
-    */
-  private def restampIvfTag(spark: org.apache.spark.sql.SparkSession,
-                            tablePrefix: String, tag: String): Unit = {
-    val updated = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_meta")
-      .withColumn("corpus_tag", lit(tag))
-      .localCheckpoint(true)
-    graft.sources.Bucketing.saveTable(updated, s"${tablePrefix}_meta")
-  }
-
-  /** The shared tombstone → conditional-compact → append → restamp
-    * composition behind [[maintainIvfIndexFromDiff]] and
-    * [[maintainIvfPqIndexFromDiff]] — ONE body, so a lifecycle change
-    * (the compact trigger, a crash-order fix) cannot silently drift
-    * between the full-vector and compressed tiers; only the append step
-    * differs and is passed in.
-    *
-    * CRASH WINDOW, stated here because this body owns the ordering: a
-    * crash between [[compactIvfIndex]] (which clears the tombstone table)
-    * and `append(fresh)` leaves changed/re-added vectors physically
-    * absent with NO tombstone recording them — the index is then a clean
-    * but STALE snapshot (pre-delta for those ids), indistinguishable
-    * from never having started the maintenance. Recovery rule: RE-RUN
-    * THE SAME DELTA. Every step is idempotent against a partially
-    * applied state (tombstoning absent ids is a no-op, the compact of an
-    * empty tombstone table is a no-op, the append's anti-join skips ids
-    * already present), and the restamp runs LAST — so the corpus tag
-    * only ever advertises a fully folded delta, and an un-restamped
-    * index tells the operator which delta to replay.
-    */
-  private def maintainIvfTierFromDiff(newSnapshot: DataFrame, diff: DataFrame,
-                                      tablePrefix: String, idCol: String,
-                                      append: DataFrame => Unit,
-                                      newCorpusTag: String): Unit = {
-    val spark = newSnapshot.sparkSession
-    val gone = diff.filter(col("status").isin("removed", "changed"))
-      .select(col(idCol))
-    if (!gone.isEmpty) deleteFromIvfIndex(gone, tablePrefix, idCol)
-    val fresh = newSnapshot.join(
-      diff.filter(col("status").isin("added", "changed")).select(col(idCol)),
-      Seq(idCol), "left_semi")
-    // a fresh id with a STANDING tombstone (changed now, or re-added after
-    // a removals-only cycle) forces the compact — the append's anti-join
-    // would otherwise silently drop it
-    val appendingTombstoned = fresh.select(col(idCol).cast("long").as("id"))
-      .join(graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted"), Seq("id"), "left_semi")
-    if (!appendingTombstoned.isEmpty) compactIvfIndex(tablePrefix)
-    if (!fresh.isEmpty) append(fresh)
-    if (newCorpusTag.nonEmpty) restampIvfTag(spark, tablePrefix, newCorpusTag)
+    val buckets = IndexStore.meta(spark, tablePrefix).getAs[Int]("buckets")
+    val memberId = if (Bucketing.freshTable(spark, s"${tablePrefix}_cells")
+        .columns.contains("neighbor_id")) "neighbor_id" else "vec_id"
+    IndexStore.compact(spark, tablePrefix, buckets, Seq(IndexStore.liveMember(
+      spark, tablePrefix, "cells", Seq("cell"), memberId)))
   }
 
   /** Fold a [[graft.ops.RelationalOps.snapshotDiff]] delta into a
-    * persisted IVF index — the embedding mirror of
-    * [[graft.ops.DedupOps.maintainBandedIndexFromDiff]], closing the
-    * incremental-crawl loop for the ANN tier: `removed` and `changed` ids
-    * tombstone out; the index COMPACTS whenever an id about to append is
-    * tombstoned (`changed` ids from this delta, but also ids re-ADDED
-    * after an earlier removals-only cycle left their tombstone standing —
-    * without the compact the append's anti-join would silently drop them);
-    * then `added` + `changed` vectors append under the FROZEN quantizer.
+    * persisted IVF index: [[graft.sources.IndexStore.maintainFromDiff]]
+    * with this index's compact and its append under the FROZEN quantizer.
     * With exhaustive probes (nProbe = nCells) the maintained index answers
     * exactly as one rebuilt from the new snapshot — results are then
     * centroid-independent — and at partial probe it matches a frozen-
     * quantizer rebuild (BucketingSpec asserts the composed maintenance
-    * against a fresh build). Crash mid-maintenance: replay the same
-    * delta — see the crash-window note on [[maintainIvfTierFromDiff]].
+    * against a fresh build).
     */
   def maintainIvfIndexFromDiff(newSnapshot: DataFrame, diff: DataFrame,
                                tablePrefix: String,
                                idCol: String = "vec_id",
                                vecCol: String = "embedding",
                                newCorpusTag: String = ""): Unit =
-    maintainIvfTierFromDiff(newSnapshot, diff, tablePrefix, idCol,
-      fresh => appendToIvfIndex(fresh, tablePrefix, idCol, vecCol),
-      newCorpusTag)
+    IndexStore.maintainFromDiff(newSnapshot, diff, tablePrefix, idCol,
+      newCorpusTag)(() => compactIvfIndex(tablePrefix),
+      fresh => appendToIvfIndex(fresh, tablePrefix, idCol, vecCol))
 
   /** Per-cell DRIFT report for a persisted IVF index — the visibility half
     * of the frozen-quantizer caveat on [[appendToIvfIndex]]: appends assign
@@ -2763,8 +2544,8 @@ object SimilarityOps {
     */
   def ivfDriftReport(spark: org.apache.spark.sql.SparkSession,
                      tablePrefix: String): DataFrame = {
-    val cells = liveCells(spark, tablePrefix, "neighbor_id")
-    val cents = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_centroids")
+    val cells = IndexStore.liveTable(spark, tablePrefix, "cells", "neighbor_id")
+    val cents = Bucketing.freshTable(spark, s"${tablePrefix}_centroids")
       .select(col("cell"), col("center").cast("array<float>").as("ctr"))
     val total = cells.agg(count(lit(1)).cast("double").as("n_total"))
     cells.join(broadcast(cents), Seq("cell"))
@@ -2788,7 +2569,7 @@ object SimilarityOps {
                       tablePrefix: String,
                       maxShareFactor: Double = 4.0,
                       maxMeanResidual: Double = 0.5): DataFrame = {
-    val nCells = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_meta").head().getAs[Int]("n_cells")
+    val nCells = IndexStore.meta(spark, tablePrefix).getAs[Int]("n_cells")
     ivfDriftReport(spark, tablePrefix)
       .agg(count(lit(1)).as("n_live_cells"),
         sum(col("n_members")).as("n_vectors"),
@@ -2818,10 +2599,8 @@ object SimilarityOps {
                        excludeSelf: Boolean = true): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val centers: Array[Array[Double]] = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_centroids")
-      .orderBy(col("cell"))
-      .collect().map(_.getAs[scala.collection.Seq[Double]]("center").toArray)
-    val members = liveCells(spark, tablePrefix, "neighbor_id")
+    val centers = ivfCenters(spark, tablePrefix)
+    val members = IndexStore.liveTable(spark, tablePrefix, "cells", "neighbor_id")
     val bcCenters = spark.sparkContext.broadcast(centers)
     val probes = queries
       .select(col(idCol).cast("long").as("id"),
@@ -3358,7 +3137,7 @@ object SimilarityOps {
   /** True when a persisted IVF-PQ index stores RESIDUAL codes. */
   private def ivfPqIsResidual(spark: org.apache.spark.sql.SparkSession,
                               tablePrefix: String): Boolean = {
-    val m = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_meta").head()
+    val m = IndexStore.meta(spark, tablePrefix)
     m.schema.fieldNames.contains("encode") &&
       m.getAs[String]("encode") == "residual"
   }
@@ -3366,7 +3145,7 @@ object SimilarityOps {
   /** (cell, cq) integer centroids of a persisted lattice-coarse index. */
   private def ivfPqCentsQ(spark: org.apache.spark.sql.SparkSession,
                           tablePrefix: String): DataFrame =
-    graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_centroids")
+    Bucketing.freshTable(spark, s"${tablePrefix}_centroids")
       .select(col("cell"), col("center_q").as("cq"))
 
   /** Summed-LUT ADC distance over code columns `c0..c{M-1}` joined with
@@ -3505,26 +3284,31 @@ object SimilarityOps {
       .join(codes, col("id") === col("nid"))
       .select(col("cell") +: col("nid").as("vec_id") +:
         (0 until numSub).map(m => col(s"c$m")): _*)
-    graft.sources.Bucketing.writeBucketed(members, s"${tablePrefix}_cells",
+    Bucketing.writeBucketed(members, s"${tablePrefix}_cells",
       Seq("cell"), buckets)
-    graft.sources.Bucketing.saveTable(centroids, s"${tablePrefix}_centroids")
-    graft.sources.Bucketing.saveTable(
+    Bucketing.saveTable(centroids, s"${tablePrefix}_centroids")
+    Bucketing.saveTable(
       (for { m <- cb.indices; c <- cb(m).indices }
         yield (m, c, cb(m)(c).toSeq)).toDF("m", "cell", "cvec"),
       s"${tablePrefix}_codebook")
-    graft.sources.Bucketing.saveTable(
-      Seq.empty[Long].toDF("id"), s"${tablePrefix}_deleted")
-    graft.sources.Bucketing.saveTable(
-      Seq((nCells, seed, buckets, numSub, numCentroids, iters, scale,
-        corpusTag, coarse, encode, ivfPqIndexFormatVersion))
-        .toDF("n_cells", "seed", "buckets", "num_sub", "num_centroids",
-          "iters", "scale", "corpus_tag", "coarse", "encode", "fmt"),
-      s"${tablePrefix}_meta")
+    IndexStore.clearTombstones(spark, tablePrefix)
+    IndexStore.writeMeta(spark, tablePrefix, ivfPqStamp(nCells, seed,
+      numSub, numCentroids, iters, buckets, corpusTag, coarse, encode, scale))
   }
 
-  /** Build the IVF-PQ index ONLY IF the persisted one is stale — every
-    * build parameter is stamped in the meta row and compared (the trained
-    * `scale` is data-derived, stored for probes but not compared).
+  private def ivfPqStamp(nCells: Int, seed: Long, numSub: Int,
+                         numCentroids: Int, iters: Int, buckets: Int,
+                         corpusTag: String, coarse: String, encode: String,
+                         scale: Double): IndexStore.Stamp =
+    Seq("n_cells" -> nCells, "seed" -> seed, "buckets" -> buckets,
+      "num_sub" -> numSub, "num_centroids" -> numCentroids, "iters" -> iters,
+      "scale" -> scale, "corpus_tag" -> corpusTag, "coarse" -> coarse,
+      "encode" -> encode, "fmt" -> ivfPqIndexFormatVersion)
+
+  /** Build the IVF-PQ index ONLY IF the persisted one is stale (the
+    * [[graft.sources.IndexStore]] stale policy) — every build parameter is
+    * stamped in the meta row and compared (the trained `scale` is
+    * data-derived, stored for probes but not compared).
     */
   def ensureIvfPqIndex(df: DataFrame, tablePrefix: String, corpusTag: String,
                        nCells: Int = 16,
@@ -3534,24 +3318,10 @@ object SimilarityOps {
                        buckets: Int = 8, coarse: String = "kmeans",
                        encode: String = "raw",
                        scope: CacheScope = CacheScope.default): Unit = {
-    val spark = df.sparkSession
-    val upToDate = try {
-      Seq("cells", "centroids", "codebook", "meta", "deleted")
-        .forall(s => spark.catalog.tableExists(s"${tablePrefix}_$s")) && {
-        val m = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_meta").head()
-        m.schema.fieldNames.contains("fmt") &&
-          m.getAs[Int]("fmt") == ivfPqIndexFormatVersion &&
-          m.getAs[String]("corpus_tag") == corpusTag &&
-          m.getAs[Int]("n_cells") == nCells && m.getAs[Long]("seed") == seed &&
-          m.getAs[Int]("buckets") == buckets &&
-          m.getAs[Int]("num_sub") == numSub &&
-          m.getAs[Int]("num_centroids") == numCentroids &&
-          m.getAs[Int]("iters") == iters &&
-          m.getAs[String]("coarse") == coarse &&
-          m.getAs[String]("encode") == encode
-      }
-    } catch { case _: Exception => false }
-    if (!upToDate)
+    val expect = ivfPqStamp(nCells, seed, numSub, numCentroids, iters,
+      buckets, corpusTag, coarse, encode, 0.0).filter(_._1 != "scale")
+    if (!IndexStore.isFresh(df.sparkSession, tablePrefix,
+        Seq("cells", "centroids", "codebook", "meta", "deleted"), expect))
       writeIvfPqIndex(df, tablePrefix, nCells, seed, numSub, numCentroids,
         iters, idCol, vecCol, buckets, corpusTag, coarse, encode, scope)
   }
@@ -3560,10 +3330,10 @@ object SimilarityOps {
     * tables (a model-sized collect: numSub·numCentroids codebook rows). */
   private[graft] def readPqModel(spark: org.apache.spark.sql.SparkSession,
       tablePrefix: String): (Double, Array[Array[Array[Int]]]) = {
-    val meta = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_meta").head()
+    val meta = IndexStore.meta(spark, tablePrefix)
     val (numSub, nc) = (meta.getAs[Int]("num_sub"), meta.getAs[Int]("num_centroids"))
     val cb: Array[Array[Array[Int]]] = Array.ofDim(numSub, nc)
-    graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_codebook").collect().foreach { r =>
+    Bucketing.freshTable(spark, s"${tablePrefix}_codebook").collect().foreach { r =>
       cb(r.getAs[Int]("m"))(r.getAs[Int]("cell")) =
         r.getAs[scala.collection.Seq[Int]]("cvec").toArray
     }
@@ -3573,40 +3343,36 @@ object SimilarityOps {
   /** APPEND a batch into the persisted IVF-PQ index: assign to the FROZEN
     * coarse centroids (broadcast, compiled loop — [[appendToIvfIndex]]'s
     * shape), encode under the FROZEN PQ model ([[pqEncode]] — X106's
-    * stateless stage), `insertInto` the bucketed cells. Ingest is
+    * stateless stage), admit ([[graft.sources.IndexStore.admit]] —
+    * tombstoned and already present ids skip, so a replay inserts
+    * nothing) and `insertInto` the bucketed cells. Ingest is
     * |batch|-sized; both quantizers drift as the distribution moves —
     * retrain = [[ensureIvfPqIndex]] with a new tag, and [[ivfDriftReport]]
     * on a full-vector twin measures when.
     */
   def appendToIvfPqIndex(batch: DataFrame, tablePrefix: String,
                          idCol: String = "vec_id",
-                         vecCol: String = "embedding"): Unit = {
-    val spark = batch.sparkSession
-    // tombstoned ids skip until a compact (see [[appendToIvfIndex]])
-    val dels = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_deleted")
-    val admissible = batch.join(broadcast(dels),
-      batch(idCol).cast("long") === dels("id"), "left_anti")
-    ivfPqAssignCodes(admissible, tablePrefix, idCol, vecCol)
+                         vecCol: String = "embedding"): Unit =
+    IndexStore.admit(ivfPqAssignCodes(batch, tablePrefix, idCol, vecCol),
+        tablePrefix,
+        Bucketing.freshTable(batch.sparkSession, s"${tablePrefix}_cells"),
+        "vec_id")
       .write.insertInto(s"${tablePrefix}_cells")
-  }
 
-  /** [[maintainIvfIndexFromDiff]] for the IVF-PQ tier: identical
-    * tombstone → conditional-compact → append composition, with codes
+  /** [[maintainIvfIndexFromDiff]] for the IVF-PQ tier, with codes
     * assigned under the FROZEN coarse quantizer AND frozen PQ codebook.
     * Maintained-index probes match a frozen-model rebuild exactly
     * (BucketingSpec); a fresh [[writeIvfPqIndex]] rebuild retrains both
     * models, so schedule one on [[ivfDriftSummary]] evidence as usual.
-    * Crash mid-maintenance: replay the same delta — see the crash-window
-    * note on [[maintainIvfTierFromDiff]].
     */
   def maintainIvfPqIndexFromDiff(newSnapshot: DataFrame, diff: DataFrame,
                                  tablePrefix: String,
                                  idCol: String = "vec_id",
                                  vecCol: String = "embedding",
                                  newCorpusTag: String = ""): Unit =
-    maintainIvfTierFromDiff(newSnapshot, diff, tablePrefix, idCol,
-      fresh => appendToIvfPqIndex(fresh, tablePrefix, idCol, vecCol),
-      newCorpusTag)
+    IndexStore.maintainFromDiff(newSnapshot, diff, tablePrefix, idCol,
+      newCorpusTag)(() => compactIvfIndex(tablePrefix),
+      fresh => appendToIvfPqIndex(fresh, tablePrefix, idCol, vecCol))
 
   /** A batch routed and encoded under a persisted IVF-PQ index's FROZEN
     * models — the cells-table row shape (cell, vec_id, c0..c{M-1}); the
@@ -3655,10 +3421,10 @@ object SimilarityOps {
                          nearest: Int = 1): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
-    val meta = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_meta").head()
+    val meta = IndexStore.meta(spark, tablePrefix)
     val lattice = meta.getAs[String]("coarse") == "lattice"
     val scale = meta.getAs[Double]("scale")
-    val cents = graft.sources.Bucketing.freshTable(spark, s"${tablePrefix}_centroids").orderBy(col("cell"))
+    val cents = Bucketing.freshTable(spark, s"${tablePrefix}_centroids").orderBy(col("cell"))
     val typed = vectors.select(col(idCol).cast("long").as("id"),
       col(vecCol).cast("array<float>").as("v")).as[(Long, Array[Float])]
     if (lattice) {
@@ -3726,11 +3492,11 @@ object SimilarityOps {
         .join(qvq, Seq("query_id"))
         .join(broadcast(ivfPqCentsQ(spark, tablePrefix)), Seq("cell"))
         .select(col("query_id") +: col("cell") +: lutCols(qres, cb): _*)
-      liveCells(spark, tablePrefix, "vec_id")
+      IndexStore.liveTable(spark, tablePrefix, "cells", "vec_id")
         .join(broadcast(luts), Seq("cell"))
         .select(col("query_id"), col("vec_id"), adcSum(cb.length).as("adc_dist"))
     } else {
-      liveCells(spark, tablePrefix, "vec_id")
+      IndexStore.liveTable(spark, tablePrefix, "cells", "vec_id")
         .join(broadcast(probes), Seq("cell"))
         .join(broadcast(pqLuts(queries, scale, cb, idCol, vecCol)), Seq("query_id"))
         .select(col("query_id"), col("vec_id"), adcSum(cb.length).as("adc_dist"))

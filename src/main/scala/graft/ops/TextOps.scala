@@ -339,14 +339,6 @@ object TextOps {
       .select(col("doc_id"), col(langCol), col("quality"))
   }
 
-  /** Full-content fingerprint (md5 hex) — the exact-dedup key. */
-  def fingerprintMd5(text: Column): Column = md5(text)
-
-  /** 64-bit content fingerprint via xxhash64 (cheaper than md5; Spark-only
-    * semantics, used by dedup/simhash internals).
-    */
-  def fingerprint64(text: Column): Column = xxhash64(text)
-
   /** Word k-shingles: sliding windows of k consecutive tokens joined by a
     * space — the standard unit for near-dup fingerprinting (MinHash/SimHash).
     * Pure array expression: transform over a 0..n-k index sequence.
@@ -2925,7 +2917,6 @@ object TextOps {
                         buckets: Int = 8): Unit = {
     import graft.sources.Bucketing
     val spark = corpus.sparkSession
-    import spark.implicits._
     val post = postingsOf(corpus, textCol, idCol, ngram)
     val stats = corpus.agg(count(lit(1)).as("n_docs"),
       sum(size(ngramTerms(col(textCol), ngram))).cast("long").as("total_len"))
@@ -2937,37 +2928,28 @@ object TextOps {
       s"${tablePrefix}_postings", Seq("term"), buckets)
     Bucketing.writeBucketed(fullDf, s"${tablePrefix}_df", Seq("term"), buckets)
     Bucketing.saveTable(stats, s"${tablePrefix}_stats")
-    Bucketing.saveTable(
-      Seq((maxDfPpm, ngram, buckets, corpusTag, lexicalIndexFormatVersion))
-        .toDF("max_df_ppm", "ngram", "buckets", "corpus_tag", "fmt"),
-      s"${tablePrefix}_meta")
+    graft.sources.IndexStore.writeMeta(spark, tablePrefix,
+      lexicalStamp(maxDfPpm, ngram, buckets, corpusTag))
   }
 
+  private def lexicalStamp(maxDfPpm: Long, ngram: Int, buckets: Int,
+                           corpusTag: String): graft.sources.IndexStore.Stamp =
+    Seq("max_df_ppm" -> maxDfPpm, "ngram" -> ngram, "buckets" -> buckets,
+      "corpus_tag" -> corpusTag, "fmt" -> lexicalIndexFormatVersion)
+
   /** Build the lexical index only if the persisted one is stale — the
-    * [[graft.ops.DedupOps.ensureBandedIndex]] contract: tables exist and
-    * the meta row matches tag + every build parameter, else rebuild.
+    * [[graft.sources.IndexStore]] stale policy: tables exist and the meta
+    * row matches tag + every build parameter, else rebuild.
     */
   def ensureLexicalIndex(corpus: DataFrame, tablePrefix: String,
                          corpusTag: String,
                          textCol: String = "text", idCol: String = "doc_id",
                          maxDfPpm: Long = 500000L, ngram: Int = 1,
-                         buckets: Int = 8): Unit = {
-    val spark = corpus.sparkSession
-    val upToDate = try {
-      lexicalIndexTables
-        .forall(s => spark.catalog.tableExists(s"${tablePrefix}_$s")) && {
-        val m = spark.table(s"${tablePrefix}_meta").head()
-        m.getAs[Int]("fmt") == lexicalIndexFormatVersion &&
-          m.getAs[String]("corpus_tag") == corpusTag &&
-          m.getAs[Long]("max_df_ppm") == maxDfPpm &&
-          m.getAs[Int]("ngram") == ngram &&
-          m.getAs[Int]("buckets") == buckets
-      }
-    } catch { case _: Exception => false }
-    if (!upToDate)
+                         buckets: Int = 8): Unit =
+    if (!graft.sources.IndexStore.isFresh(corpus.sparkSession, tablePrefix,
+        lexicalIndexTables, lexicalStamp(maxDfPpm, ngram, buckets, corpusTag)))
       writeLexicalIndex(corpus, tablePrefix, corpusTag, textCol, idCol,
         maxDfPpm, ngram, buckets)
-  }
 
   /** BM25 top-`k` against the PERSISTED index — row-identical to
     * [[bm25TopK]] over the same corpus/parameters (OpsSpec proves parity).

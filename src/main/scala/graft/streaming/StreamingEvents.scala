@@ -620,8 +620,8 @@ object StreamingEvents {
       // collision check against LIVE members only: a tombstoned
       // vector's codes linger in _cells until compact, and deleted
       // content must not block re-ingest of an identical vector
-      val dup = graft.ops.SimilarityOps
-        .liveCells(spark, tablePrefix, "vec_id")
+      val dup = graft.sources.IndexStore
+        .liveTable(spark, tablePrefix, "cells", "vec_id")
         .join(broadcast(bc.select(keys.map(col) :+
           col("vec_id").as("bid"): _*)), keys.toSeq)
         .select(col("bid")).distinct()

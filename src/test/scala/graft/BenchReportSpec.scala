@@ -83,4 +83,18 @@ class BenchReportSpec extends AnyFunSuite {
       json.contains("\"retimed\":{\"q01_x\":1.5}"),
       s"both the sweep number and the floor must ship: $json")
   }
+
+  test("renderCompactJson: 20 errored queries keep the line under 2,000 chars, with an error count") {
+    // errors are capped at 160 chars where they are created
+    val merged: Map[String, Either[String, Double]] =
+      (1 to 190).map(i => f"q$i%03d_ok" -> (Right(0.5): Either[String, Double]))
+        .toMap ++ (1 to 20).map(i => f"q9$i%02d_bad" ->
+          (Left("AnalysisException: " + "x" * 141): Either[String, Double]))
+    val line = Bench.renderCompactJson(merged, "/d", Map.empty,
+      "BENCH_full_r17.json")
+    assert(line.length < 2000, s"compact line too long: ${line.length}")
+    assert(line.contains("\"n_errors\":20"))
+    assert("_bad\":".r.findAllMatchIn(line).length === Bench.compactErrorCap)
+    assert(line.contains("q901_bad"), "the first errors by name are listed")
+  }
 }

@@ -190,4 +190,51 @@ class R16OptSpec extends SparkTestBase {
     // value sums successes only
     assert(line.contains("\"value\":105"))
   }
+
+  test("PqCodes/PqMinDists: a short vector or a null element fails loudly; a NULL vector stays NULL") {
+    val cb: Array[Array[Array[Int]]] = Array.tabulate(2, 3) { (m, c) =>
+      Array.fill(4)(m * 10 + c)
+    }
+    def causes(t: Throwable) =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+        .filter(_ != null)
+    val bad = Seq(
+      "short" -> Seq[Integer](1, 2, 3, 4, 5, 6, 7),
+      "null element" -> Seq[Integer](1, 2, 3, null, 5, 6, 7, 8))
+    for ((what, v) <- bad; (name, mk) <- Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression => org.apache.spark.sql.catalyst.expressions.Expression)](
+        "pq_codes" -> (e => graft.functions.PqCodes(e, cb)),
+        "pq_min_dists" -> (e => graft.functions.PqMinDists(e, cb)))) {
+      val df = Seq(Tuple1(v)).toDF("qv")
+        .select(col("qv").cast("array<int>").as("qv"))
+      val e = intercept[Exception] {
+        df.select(bridge.column(mk(bridge.expression(col("qv"))))).collect()
+      }
+      assert(causes(e).exists(_.contains(name)), s"$what → $name: $e")
+    }
+    // a full-length vector still encodes; a NULL vector yields NULL
+    val ok = Seq(Tuple1(Seq[Integer](0, 0, 0, 0, 12, 12, 12, 12)),
+        Tuple1(null: Seq[Integer])).toDF("qv")
+      .select(bridge.column(graft.functions.PqCodes(
+        bridge.expression(col("qv").cast("array<int>")), cb)).as("c"))
+      .collect()
+    assert(ok(0).getSeq[Int](0) === Seq(0, 2))
+    assert(ok(1).isNullAt(0))
+  }
+
+  test("trussDedupEffect: IntegerType ids >= 2^30 in separate components stay separate") {
+    val base = 1 << 30
+    // two disjoint triangles high in the Int range plus an edge at
+    // Int.MaxValue: doubling in Int would overflow
+    val pairs = Seq((base, base + 1), (base + 1, base + 2), (base, base + 2),
+        (base + 10, base + 11), (base + 11, base + 12), (base + 10, base + 12),
+        (Int.MaxValue - 1, Int.MaxValue))
+      .toDF("a", "b")
+    assert(pairs.schema("a").dataType === org.apache.spark.sql.types.IntegerType)
+    val eff = GraphOps.trussDedupEffect(pairs, k = 3).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4))).toMap
+    // (n_edges, n_clusters, n_members, largest_cluster)
+    assert(eff("closure") === ((7L, 3L, 8L, 3L)))
+    assert(eff("truss3") === ((6L, 2L, 6L, 3L)))
+  }
 }
